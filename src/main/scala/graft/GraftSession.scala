@@ -54,6 +54,22 @@ object GraftSession {
     // the corrupt-record column; parser-side pruning would skip the arity
     // check on pruned reads (EDI feeds are narrow — pruning buys nothing)
     .config("spark.sql.csv.parser.columnPruning.enabled", "false")
+    // Spark's generated-code cache must hold a whole pass of graft's plans,
+    // or a warm loop re-runs Janino (and then the JIT) on classes it
+    // compiled a moment ago. Measured working sets (distinct classes per
+    // pass, perfbench, CodegenMetrics): one drain of the seven EDI config
+    // messages 107, one pass of four registry queries 100. The cache is a
+    // Guava LRU with 4 segments of maxEntries/4 each, evicting per segment:
+    // at the default 100 (25 per segment) no pass fits, and every warm pass
+    // recompiled 44-67 classes (EDI) or 26-49 (registry). At 2000 (500 per
+    // segment) both working sets fit together several times over, and warm
+    // passes compile 0 (registry) or 2 (EDI: the consumer's own stream
+    // read, whose tasks run under a class loader that is new for each
+    // query start, and the cache is keyed by loader). An entry keeps its
+    // source (about 5 KB mean, 20 KB p95) and bytecode (about 2.2 KB mean,
+    // 7 KB p95), so a full cache holds roughly 15 MB of driver heap; it only
+    // fills in a JVM that generates that many distinct plans.
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   def local(threads: Int = 4): SparkSession = {
     val s = tune(

@@ -3,6 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
 /** Per-run pipeline stats, the Spark-native form of the reference's
   * `ConsumerCommand::outputStats` (/root/reference/src/Command/
   * ConsumerCommand.php:100-110): the reference prints processing time and
@@ -26,34 +30,23 @@ object Metrics {
     (df.observe(obs, count(lit(1)).as("rows"), count(col(keyCol)).as("non_null_keys")), obs)
   }
 
-  /** Run `action` on the instrumented frame and return its stats. Uses the
-    * bounded `getOrEmpty` so an action-less sink yields zeros instead of
-    * blocking the consumer forever.
+  /** Run `action` on the instrumented frame and return its stats. The
+    * observed metrics are awaited for at most [[StatsWait]]: an action-less
+    * sink never completes the observation, and must yield zero stats
+    * instead of blocking the consumer forever.
     */
   def timed[T](df: DataFrame, keyCol: String)(action: DataFrame => T): (T, RunStats) = {
     val (instrumented, obs) = attach(df, keyCol)
     val t0 = System.nanoTime()
     val result = action(instrumented)
-    // Observation.getOrEmpty (bounded wait) is private[sql] in Scala but
-    // public in bytecode — the blocking get() would hang forever on an
-    // action-less sink, which a library must never do. Its internal wait is
-    // only ~100ms, so under listener-bus load one call can miss metrics
-    // that ARE coming: poll with a bounded overall deadline. A reflection
-    // failure (Spark rename) degrades to zero stats instead of killing the
-    // consumer loop.
-    val row: Map[String, Any] =
-      try {
-        val getOrEmpty = classOf[Observation].getMethod("getOrEmpty")
-        val deadline = System.nanoTime() + 2000000000L // 2s overall bound
-        var r = getOrEmpty.invoke(obs).asInstanceOf[Map[String, Any]]
-        while (r.isEmpty && System.nanoTime() < deadline) {
-          r = getOrEmpty.invoke(obs).asInstanceOf[Map[String, Any]]
-        }
-        r
-      } catch { case _: ReflectiveOperationException | _: ClassCastException => Map.empty }
-    (result, RunStats(
-      row.getOrElse("rows", 0L).asInstanceOf[Long],
-      row.getOrElse("non_null_keys", 0L).asInstanceOf[Long],
-      (System.nanoTime() - t0) / 1000000L))
+    val row = Try(Await.result(obs.future, StatsWait)).toOption
+    def stat(name: String) = row.fold(0L)(_.getAs[Long](name))
+    (result, RunStats(stat("rows"), stat("non_null_keys"), (System.nanoTime() - t0) / 1000000L))
   }
+
+  /** How long [[timed]] waits for observed metrics after the sink returns:
+    * they arrive on the listener bus shortly after the action ends, so the
+    * bound is only reached by a sink that ran no action on the frame.
+    */
+  val StatsWait: FiniteDuration = 2.seconds
 }

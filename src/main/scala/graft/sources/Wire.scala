@@ -32,7 +32,7 @@ object CsvSource {
       spark.conf.get("spark.sql.csv.parser.columnPruning.enabled", "true") == "false",
       "CsvSource.read requires spark.sql.csv.parser.columnPruning.enabled=false " +
         "(set by GraftSession.tune) so ragged-row detection survives column pruning")
-    val header = spark.read.option("header", "true").csv(path).columns
+    val header = headerOf(spark, path)
     require(header.nonEmpty, s"CsvSource.read: no header row found in $path")
     val schema = StructType(
       header.map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType)) :+
@@ -51,6 +51,44 @@ object CsvSource {
       .filter(col("_graft_corrupt").isNull &&
         coalesce(length(col(s"`${header.head}`")) >= -1, lit(true)))
       .drop("_graft_corrupt")
+  }
+
+  /** The column names `spark.read.option("header", "true").csv(path)` would
+    * give, without running a Spark job: the first non-empty line of the
+    * first data file (name order) that has one is read through the Hadoop
+    * `FileSystem`, and Spark's own CSV header rules (quoting, `_c<i>` for
+    * empty names, de-duplication under `spark.sql.caseSensitive`) are
+    * applied to it as a one-row local Dataset, which plans to a local scan.
+    */
+  private def headerOf(spark: SparkSession, path: String): Array[String] =
+    firstLine(spark, path).fold(Array.empty[String]) { line =>
+      spark.read.option("header", "true")
+        .csv(spark.createDataset(Seq(line))(org.apache.spark.sql.Encoders.STRING)).columns
+    }
+
+  private def firstLine(spark: SparkSession, path: String): Option[String] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    // Spark's file index skips hidden and bookkeeping files (_SUCCESS, .crc)
+    def data(s: FileStatus) = s.isFile && !s.getPath.getName.startsWith("_") &&
+      !s.getPath.getName.startsWith(".")
+    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
+    if (matched.isEmpty) throw new java.io.FileNotFoundException(s"Path does not exist: $path")
+    val files = matched.sortBy(_.getPath.getName)
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).sortBy(_.getPath.getName) else Array(s))
+      .filter(data)
+    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    files.iterator.map { f =>
+      val raw = fs.open(f.getPath)
+      val in = Option(codecs.getCodec(f.getPath)).fold[java.io.InputStream](raw)(_.createInputStream(raw))
+      val r = new java.io.BufferedReader(new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+      try Iterator.continually(r.readLine()).takeWhile(_ != null).find(_.trim.nonEmpty)
+        // Hadoop's line reader drops a UTF-8 byte-order mark at offset 0
+        .map(_.stripPrefix("\uFEFF"))
+      finally r.close()
+    }.collectFirst { case Some(l) => l }
   }
 
   /** Line-level parse for already-loaded content (streaming bodies, tests). */
