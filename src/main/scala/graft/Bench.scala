@@ -16,7 +16,7 @@ object Bench {
     // overrides) — scale runs no longer depend on remembering the env var
     val width = GraftSession.autoSizeShuffle(spark, sfDir)
     System.err.println(s"[bench] initial shuffle width: $width")
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).count()
+    GraftSession.table(spark, sfDir, "lineitem").limit(100).count()
 
     // real-ingest extras beyond the oracle registry: q_excel_file parses the
     // sf lineitem table from an actual directory of .xlsx workbooks
@@ -32,8 +32,8 @@ object Bench {
           graft.sources.ExcelSource.readXlsxGrid(s, BenchFixtures.xlsxDir(s, dir)), None)),
       "q_dedup_probe" -> ((s: SparkSession, dir: String) =>
         graft.operators.Dedup.probeSurvivors(
-          s.read.parquet(BenchFixtures.nearDupIndexDir(s, dir)),
-          s.read.parquet(s"$dir/documents.parquet")
+          GraftSession.parquet(s, BenchFixtures.nearDupIndexDir(s, dir)),
+          GraftSession.table(s, dir, "documents")
             .filter(org.apache.spark.sql.functions.col("doc_id") % 4 === 0),
           "doc_id", "text", threshold = 0.8)),
       // the cluster-substrate BUILD leg, timed explicitly: the four
@@ -42,7 +42,7 @@ object Bench {
       // this entry keeps the one-time prefix-pair + CC chain on the books
       "q_cluster_build" -> ((s: SparkSession, dir: String) =>
         graft.operators.Dedup.clusterAssign(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", 4, 5)))
+          GraftSession.table(s, dir, "documents"), "doc_id", "text", 4, 5)))
     // SPARK_GRAFT_BENCH_REPS: passes per regime (default 3 — the driver
     // contract). SPARK_GRAFT_BENCH_SKIP: comma-separated query names to
     // exclude (for scale runs where a quadratic-by-construction baseline
@@ -66,19 +66,27 @@ object Bench {
     graft.operators.Dedup.materializedSubstrate(spark, sfDir, 4, 5)
     graft.operators.Caches.release()
 
+    // every frame is evaluated down to its last column: a `noop` write runs
+    // the whole plan, where a count() lets Catalyst prune the columns (and
+    // the work) nobody counts
+    def evaluate(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     // JIT/codegen warmup: run every query once on the SMALLEST scale factor
     // (negligible data, same generated code paths) so timing at the target
     // SF starts compiled — C2 can otherwise still be compiling in run 2
     val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warmDir.isDirectory && warmDir.getPath != sfDir) {
       order.foreach { case (_, fn) =>
-        try fn(spark, warmDir.getPath).count() catch { case _: Throwable => () }
+        try evaluate(fn(spark, warmDir.getPath)) catch { case _: Throwable => () }
         graft.operators.Caches.release()
       }
     }
-    def time(fn: Q): Double = {
+    // a failed run keeps the -1 of the stdout contract; its cause goes to stderr
+    def time(name: String, fn: Q): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try evaluate(fn(spark, sfDir)) catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // COLD: per-query MIN across three INTERLEAVED full passes (pass 1 of
@@ -96,7 +104,7 @@ object Bench {
       } else m.getOrElseUpdate(name, -1.0)
     val cold = scala.collection.mutable.Map.empty[String, Double]
     for (_ <- 1 to reps; (name, fn) <- order) {
-      val t = time(fn)
+      val t = time(name, fn)
       graft.operators.Caches.release()
       record(cold, name, t)
     }
@@ -107,7 +115,7 @@ object Bench {
     // stable axis on both regimes.
     val warm = scala.collection.mutable.Map.empty[String, Double]
     for ((name, fn) <- order) {
-      for (_ <- 1 to reps) record(warm, name, time(fn))
+      for (_ <- 1 to reps) record(warm, name, time(name, fn))
       graft.operators.Caches.release()
     }
     def js(m: collection.Map[String, Double]): String =

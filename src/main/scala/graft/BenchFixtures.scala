@@ -38,7 +38,7 @@ object BenchFixtures {
       s"target/bench_fixtures/neardup_index_${NearDupIndexVersion}_${new File(sfDir).getName}")
     if (!new File(dir, "_SUCCESS").exists()) {
       graft.operators.Dedup.buildNearDupIndex(
-          spark.read.parquet(s"$sfDir/documents.parquet").filter(col("doc_id") % 4 =!= 0),
+          GraftSession.table(spark, sfDir, "documents").filter(col("doc_id") % 4 =!= 0),
           "doc_id", "text")
         .write.mode("overwrite").parquet(dir.getPath)
     }
@@ -51,7 +51,7 @@ object BenchFixtures {
     if (!done.exists()) {
       dir.mkdirs()
       val path = dir.getAbsolutePath
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      GraftSession.table(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice").cast("decimal(12,2)").cast("double").as("l_price"))
         .repartition(parts)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 import scala.util.chaining._
 
@@ -86,7 +86,75 @@ object GraftSession {
 
   /** Load one of the standard tables from a scale-factor directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)`, with the schema worked out on the driver.
+    *
+    * Spark infers a parquet schema with a Spark job of its own
+    * (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`: parallelize,
+    * mapPartitions, collect), even when, as without `mergeSchema`, it reads
+    * a single footer. At registry sizes that job is a large share of a
+    * query's fixed cost: 10 of the 43 jobs of a perfbench `registry_full`
+    * pass, and 6 of `q5_local_supplier`'s 15 stages. This helper does the
+    * same inference without the job, then hands Spark the schema:
+    *  - list `path` through the Hadoop `FileSystem`, dropping the names
+    *    Spark's file index drops (`_…` and `.…`, except `_metadata…`,
+    *    `_common_metadata…` and partition-style `_a=b`; `…._COPYING_`);
+    *  - pick the file Spark's inference picks: `_common_metadata`, else
+    *    `_metadata`, else the first data file in path order;
+    *  - read that footer without its row groups, and convert it with the
+    *    converter `mergeSchemasInParallel` builds (the same five session
+    *    confs, constructor defaults for the other three).
+    *
+    * It falls back to plain `spark.read.parquet(path)`, so Spark's own
+    * errors and semantics stand, wherever the shortcut could differ: a glob
+    * or a missing path, sub-directories (partitions), no data file,
+    * `mergeSchema` on, a Hadoop input path filter, or a footer that cannot
+    * be read. Each call reads one footer and keeps nothing, so a table
+    * rewritten in place is never read under a stale schema.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val sql = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    if (sql.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)) ||
+        conf.get("mapreduce.input.pathFilter.class") != null) return None
+    // Spark's file index (HadoopFSUtils.shouldFilterOutPathName)
+    def listed(name: String) =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) ||
+        name.startsWith("_common_metadata") || name.startsWith("_metadata")
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val leaves = fs.listStatus(p).filter(s => listed(s.getPath.getName))
+      if (leaves.exists(_.isDirectory)) return None
+      // ParquetUtils.splitFiles/inferSchema
+      val sorted = leaves.sortBy(_.getPath.toString)
+      def named(n: String) = sorted.find(_.getPath.getName == n)
+      val summary = Set("_common_metadata", "_metadata")
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(sorted.find(s => !summary(s.getPath.getName)))
+        .map { f =>
+          val footer = new Footer(f.getPath,
+            ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
+          ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = sql.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+            nanosAsLong = sql.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation))
+        }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   /** `df`, rebalanced up to the session's parallelism when the FILE LAYOUT
     * caps the scan below it — single-row-group files (every toy/test

@@ -567,7 +567,7 @@ object Dedup {
     val paths = substrateStore.computeIfAbsent(s"$dir|$tNum/$tDen", _ => {
       val base = java.nio.file.Files
         .createTempDirectory(s"graft_clusters_${tNum}_$tDen").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.GraftSession.table(s, dir, "documents")
       val sub = clusterSubstrate(docs, "doc_id", "text", tNum, tDen)
       val (kp, rp, lp) = (s"$base/keyed", s"$base/rep_pairs", s"$base/set_lbl")
       sub.keyed.write.mode("overwrite").parquet(kp)
@@ -575,8 +575,8 @@ object Dedup {
       sub.setLbl.write.mode("overwrite").parquet(lp)
       (kp, rp, lp)
     })
-    ClusterSubstrate(s.read.parquet(paths._1), s.read.parquet(paths._2),
-      s.read.parquet(paths._3))
+    def read(path: String) = graft.GraftSession.parquet(s, path)
+    ClusterSubstrate(read(paths._1), read(paths._2), read(paths._3))
   }
 
   /** Materialized per-doc (id, cluster_id, cluster_size) label table over

@@ -23,15 +23,19 @@ object DriveFolderSource {
     }
   }
 
+  /** `folder` is any Hadoop path (a local path, a `file:` URI, `hdfs://`,
+    * `s3a://`…), listed through its `FileSystem` as the other readers do. */
   def read(spark: SparkSession, folder: String, range: Option[String]): DataFrame = {
-    val dir = new java.io.File(folder)
-    val files = Option(dir.listFiles()).map(_.filter(_.isFile)).getOrElse(Array.empty)
+    val dir = new org.apache.hadoop.fs.Path(folder)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = (if (fs.isDirectory(dir)) fs.listStatus(dir).filter(_.isFile) else Array.empty)
+      .map(_.getPath)
     require(files.nonEmpty, s"Google Drive: No files found in folder $folder")
-    val first = files.map(_.getName).sorted.head
-    fileType(first) match {
-      case "csv"   => CsvSource.read(spark, s"$folder/$first")
-      case "excel" => ExcelSource.toTable(ExcelSource.readXlsxGrid(spark, s"$folder/$first"), range)
-      case _ => throw new IllegalArgumentException(s"Google Drive: Unsupported file type: $first")
+    val first = files.minBy(_.getName)
+    fileType(first.getName) match {
+      case "csv"   => CsvSource.read(spark, first.toString)
+      case "excel" => ExcelSource.toTable(ExcelSource.readXlsxGrid(spark, first.toString), range)
+      case _ => throw new IllegalArgumentException(s"Google Drive: Unsupported file type: ${first.getName}")
     }
   }
 }

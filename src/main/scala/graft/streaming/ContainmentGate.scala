@@ -35,7 +35,7 @@ final class ContainmentGate(initialIndex: DataFrame, idCol: String, textCol: Str
 
   @volatile private var index: DataFrame = persistDir match {
     case Some(dir) if ContainmentGate.hasData(dir) =>
-      initialIndex.unionByName(initialIndex.sparkSession.read.parquet(dir))
+      initialIndex.unionByName(graft.GraftSession.parquet(initialIndex.sparkSession, dir))
         .localCheckpoint(true)
     case _ => initialIndex
   }

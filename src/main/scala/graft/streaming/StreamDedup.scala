@@ -129,7 +129,7 @@ final class NearDupGate(initialIndex: DataFrame, idCol: String, textCol: String,
     case Some(dir) if NearDupGate.hasData(dir) =>
       // recovery: prior admissions re-enter the probe index before the
       // first batch — identical schema, so the probe plan is unchanged
-      initialIndex.unionByName(initialIndex.sparkSession.read.parquet(dir))
+      initialIndex.unionByName(graft.GraftSession.parquet(initialIndex.sparkSession, dir))
         .localCheckpoint(true)
     case _ => initialIndex
   }

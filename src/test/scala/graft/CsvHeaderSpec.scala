@@ -1,9 +1,7 @@
 package graft
 
 import graft.sources.CsvSource
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.{Files, Path}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** `CsvSource.read` takes its header from the file itself, with Spark's CSV
   * header rules and without running a Spark job. */
@@ -17,37 +15,6 @@ class CsvHeaderSpec extends SparkSpec {
   /** Header names as Spark's own file-level header read derives them. */
   private def sparkHeader(path: String): Seq[String] =
     spark.read.option("header", "true").csv(path).columns.toSeq
-
-  /** Jobs started from this thread while `body` runs. A sentinel job ends the
-    * count: listener events arrive in order, so once it is seen every job
-    * `body` started has been seen too. */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"csv-header-${System.nanoTime()}"
-    val sentinel = "csv-header-sentinel"
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
-    val done = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (e.properties.getProperty("spark.job.description") == sentinel) done.countDown()
-          else seen.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "csv header")
-    try {
-      val out = body
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(30, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      (out, seen.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("quoted, duplicate and empty header names match Spark's header read") {
     val dir = Files.createTempDirectory("csvhdr")

@@ -97,6 +97,22 @@ class SourcesSpec extends SparkSpec {
     assert(e.getMessage.contains("Unsupported file type"))
   }
 
+  test("drive folder: a file: URI reads the same rows as the plain path") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("drv-uri")
+    Files.writeString(dir.resolve("b_feed.csv"), "sku,qty\nB-1,9\n")
+    Files.writeString(dir.resolve("a_feed.csv"), "sku,qty\nA-1,4\nA-2,5\n")
+    Files.createDirectory(dir.resolve("0_subdir")) // files only: a directory never wins
+    def rows(folder: String) =
+      graft.sources.DriveFolderSource.read(spark, folder, None).collect().toSeq
+    val plain = rows(dir.toString)
+    assert(plain == Seq(Row("A-1", "4"), Row("A-2", "5")))
+    assert(rows(dir.toUri.toString) == plain)
+    val empty = Files.createTempDirectory("drv-uri-empty").toUri.toString
+    val e = intercept[IllegalArgumentException](rows(empty))
+    assert(e.getMessage.contains("No files found"))
+  }
+
   test("rest api config: per-supplier lookup, defaults, reference error modes") {
     val json =
       """{"42": {"base_uri": "https://api.example.com/", "auth": {"kind": "jwt"},

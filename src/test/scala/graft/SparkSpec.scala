@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** Shared local session for all specs (one JVM-wide session, cheap). */
 trait SparkSpec extends AnyFunSuite {
@@ -19,6 +21,37 @@ trait SparkSpec extends AnyFunSuite {
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Jobs started from this thread while `body` runs. A sentinel job ends the
+    * count: listener events arrive in order, so once it is seen every job
+    * `body` started has been seen too. */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-started-${System.nanoTime()}"
+    val sentinel = "jobs-started-sentinel"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (e.properties.getProperty("spark.job.description") == sentinel) done.countDown()
+          else seen.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      val out = body
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(30, TimeUnit.SECONDS), "sentinel job never reached the listener")
+      (out, seen.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
     }
   }
 }

@@ -19,6 +19,12 @@ prints each side's median and quartiles, the share of pairs the change wins
               change run beats every base run
   no change   none of the above
 
+With --trace, after the pairs of a workload it also runs one traced run
+(`--trace 1`) per side on the first seed and prints the per-layer figures
+that differ: every count (`spark.jobs`, `queries.<q>.stages`, ...) whose
+value moved, and the nonzero driver gaps (`spark.driver_gap_s`,
+`queries.<q>.driver_gap_s`) those counts explain.
+
 Each run's JSON result is appended to --out (JSON lines). Nothing under
 perfbench/ and nothing in BENCHMARK.json is written.
 """
@@ -46,10 +52,10 @@ def seeds(spec):
     return out
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     """One benchmark run; its result object, or None when it printed none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -102,6 +108,22 @@ def report(workload, pairs, spec):
               f"| {100 * (mc - mb) / mb:+.1f}% | {wins}/{len(ok)} | {v} |")
 
 
+def trace_report(workload, seed, traced, spec):
+    """The per-layer counts that differ between one traced run per side."""
+    print(f"\n{workload}: traced run, seed {seed}")
+    b, c = traced["base"], traced["change"]
+    if not (b and c):
+        print("a traced run printed no result")
+        return
+    print("| per-layer metric | base | change | delta |")
+    print("|---|---|---|---|")
+    for m in spec["per_layer"]:
+        name = m["name"]
+        vb, vc = b["metrics"][name]["value"], c["metrics"][name]["value"]
+        if (m["unit"] == "count" and vb != vc) or (name.endswith("driver_gap_s") and (vb or vc)):
+            print(f"| `{name}` ({m['unit']}) | {vb:.4g} | {vc:.4g} | {vc - vb:+.4g} |")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--base", required=True, help="the commit to compare the working tree against")
@@ -109,6 +131,8 @@ def main():
     ap.add_argument("--workload", action="append", required=True, help="repeat for several workloads")
     ap.add_argument("--seeds", default="201-210", help="seeds, one pair each, e.g. 201-210 or 1,5,9")
     ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--trace", action="store_true",
+                    help="after the pairs, one traced run per side on the first seed")
     ap.add_argument("--out", default=os.path.join(tempfile.gettempdir(), "perf_ab.jsonl"))
     args = ap.parse_args()
 
@@ -145,6 +169,14 @@ def main():
                         f"{s} {r['metrics']['cpu_us_per_row']['value']:.1f}" if r else f"{s} -"
                         for s, r in res.items()) + " us/row")
                 report(w, pairs, spec)
+                if args.trace:
+                    traced = {}
+                    for side in ("base", "change"):
+                        traced[side] = run(sides[side], w, ss[0], args.seconds, trace=1)
+                        out.write(json.dumps({"workload": w, "seed": ss[0], "side": side, "trace": 1,
+                                              "result": traced[side]}) + "\n")
+                        out.flush()
+                    trace_report(w, ss[0], traced, spec)
     finally:
         if tmp:
             subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", base_dir],
