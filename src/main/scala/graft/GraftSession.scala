@@ -167,7 +167,7 @@ object GraftSession {
     * where per-row work dominates the scan (tokenize / regex / hash over
     * document text): a cheap column scan does not earn the exchange
     * back (measured: langid 2.4 s → 0.5 s, plain lineitem agg
-    * 0.19 s → 0.56 s — see OptProbe `repart`).
+    * 0.19 s → 0.56 s — OPTIMIZATION_r13.md, Change 6).
     *
     * ONLY call this on scan-rooted frames (a table, or filter/project over
     * one): the partition-count probe walks `df.rdd`, and under AQE that

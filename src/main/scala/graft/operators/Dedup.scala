@@ -273,7 +273,7 @@ object Dedup {
     *                           strategies produce the identical candidate
     *                           set, so results never depend on the route.
     *                           Default 256 is the measured local[32]
-    *                           crossover (MinhashCrossoverProbe, r8: the
+    *                           crossover (PLANS.md, Round-8 deltas: the
     *                           O(n²) broadcast scan wins only below
     *                           ~128-256 sets where fixed shuffle overhead
     *                           dominates; at 16k sets it is already 5.7×
@@ -450,14 +450,10 @@ object Dedup {
     val g = setGraph(docs, idCol, textCol, threshold, bands = 20, r = 2,
       shingleN = 1, broadcastThreshold = 256L)
     // rep edges are ALREADY at the group-min long grain (r12) — the
-    // dropDuplicatesNear e0 shape with no relabel joins: a boilerplate
+    // dropDuplicatesNear edge shape with no relabel joins: a boilerplate
     // group with 10⁸ identical copies is ONE node here, so the component
     // pass never sees the |group|² doc pairs
-    val e0 = g.repPairs
-      .select(col("id_a").as("ga"), col("id_b").as("gb"))
-      .persist() // CC reads the edge frame twice (both union directions)
-    Caches.register(e0)
-    val labels = Graph.connectedComponents(e0, "ga", "gb")
+    val labels = Graph.connectedComponents(g.repPairs, "id_a", "id_b")
     // every distinct set deposits its member count into its component;
     // groups without a near-dup edge are their own component, which makes
     // an n=1 untouched group exactly the singleton bucket
@@ -522,13 +518,12 @@ object Dedup {
     // substrate: an opaque set identity to every consumer, and the long
     // relabel the downstream family did per-query now happens nowhere)
     val sub = prefixSub(docs, idCol, textCol, tNum, tDen, shingleN)
-    val repPairs = sub.repPairs.persist() // read by CC (both directions) AND consumers
+    val repPairs = sub.repPairs.persist() // read by CC AND consumers
     Caches.register(repPairs)
-    val e0 = repPairs.select(col("id_a").as("ga"), col("id_b").as("gb"))
     // (node, comp) for TOUCHED rep nodes; an edge-less set is its own
     // cluster via the coalesce — comp over group-min ids IS the global
     // min doc id of the component, since every g is its group's min
-    val labels = Graph.connectedComponents(e0, "ga", "gb")
+    val labels = Graph.connectedComponents(repPairs, "id_a", "id_b")
     val setLbl = sub.skel
       .join(labels.withColumnRenamed("node", "g"), Seq("g"), "left")
       .select(col("g").as("set_key"), coalesce(col("comp"), col("g")).as("cluster_id"), col("n"))
@@ -594,160 +589,35 @@ object Dedup {
     * Never expands to doc pairs: clustering runs on the REP graph (one node
     * per distinct word set, labeled by the group's min doc id), so a
     * boilerplate page with 10⁸ copies contributes ONE node, not 10¹⁶ pairs.
-    *
-    * Component strategy, chosen like a planner would (both routes produce
-    * identical components — spec-asserted):
-    *  - rep-edge count ≤ `collectEdgeThreshold` → BOUNDED driver union-find
-    *    (path compression, union-by-min). Rep edges are the post-verify
-    *    pairs of DISTINCT word sets — already collapsed quadratically by
-    *    canonicalization — and 4M edges is ~64 MB: the same bounded
-    *    control-plane class as IVF's quantizer sample. One job instead of
-    *    3 jobs × rounds.
-    *  - above it → distributed min-label propagation: each round is one
-    *    shuffle join over rep edges plus a pointer-halving label-of-label
-    *    lookup, so rounds grow with log(component diameter). Every round
-    *    localCheckpoints the label frame: lineage stays constant-depth and
-    *    superseded blocks are released by the ContextCleaner.
+    * Rep edges are the post-verify pairs of DISTINCT word sets — already
+    * collapsed quadratically by canonicalization — so they usually sit
+    * under [[Graph.connectedComponents]]'s driver budget; above it the
+    * engine's distributed propagation route runs (both routes produce
+    * identical components — spec-asserted).
     */
-  /** Effective driver-collect edge budget for the union-find route:
-    * `collectEdgeThreshold` is calibrated for 8-byte ids (two longs per
-    * edge ≈ 64 MB control plane at the 4M default). Wider ids — string
-    * URLs / UUIDs — shrink the budget proportionally so the bound tracks
-    * BYTES, not edge count; string ids additionally pay JVM String +
-    * hash-entry overhead per stored node, far above their UTF-8 width.
-    */
-  private[graft] def driverEdgeBudget(collectEdgeThreshold: Long, avgIdBytes: Double): Long =
-    (collectEdgeThreshold * 8.0 / math.max(8.0, avgIdBytes)).toLong
-
-  /** Which connected-components route the last [[dropDuplicatesNear]] call
-    * took ("driver" | "distributed") — test observability for the planner
-    * split; never read it concurrently with running jobs.
-    */
-  @volatile private[graft] var lastCcRoute: String = ""
-
   def dropDuplicatesNear(docs: DataFrame, idCol: String, textCol: String,
                          threshold: Double, bands: Int = 20, r: Int = 2, shingleN: Int = 1,
                          broadcastThreshold: Long = 256L, maxRounds: Int = 50,
                          collectEdgeThreshold: Long = 1L << 22): DataFrame = {
     val g = setGraph(docs, idCol, textCol, threshold, bands, r, shingleN, broadcastThreshold)
-    // rep pairs → undirected edges: already group-min node ids (r12)
-    val e0 = g.repPairs
-      .select(col("id_a").as("ga"), col("id_b").as("gb"))
-      .persist() // consumed by count + (collect | both union directions)
-    Caches.register(e0)
-    val winnersTouched = ccMinWinners(e0, idCol, maxRounds, collectEdgeThreshold)
-
-    // cluster label = min doc id of the component ⇒ the winner IS the doc
-    // whose id equals the label; isolated groups (no near-dup edge) keep
-    // their own min unconditionally
-    val touchedNodes = e0.select(col("ga").as(idCol))
-      .unionByName(e0.select(col("gb").as(idCol))).distinct()
-    val winners = winnersTouched
-      .unionByName(g.skel.select(col("g").as(idCol))
-        .join(touchedNodes, Seq(idCol), "left_anti"))
+    // rep pairs are already group-min node ids (r12); isolated groups (no
+    // near-dup edge) keep their own min unconditionally
+    val winners = survivors(g.repPairs.select(col("id_a").as("ga"), col("id_b").as("gb")),
+      g.skel.select(col("g").as(idCol)), idCol, maxRounds, collectEdgeThreshold)
     docs.join(winners, idCol)
   }
 
-  /** Connected components over an undirected 2-column edge frame (must be
-    * persisted by the caller), returning ONE row per component — its
-    * minimum node id, in a single `idCol` column. Shared by the near-dup
-    * and semantic materializers. Routes through a bounded driver union-find
-    * below the byte-aware edge budget and min-label propagation with
-    * pointer halving above; the two routes are spec-proved identical.
+  /** One survivor per connected component of the (ga, gb) edge frame —
+    * its minimum id, i.e. the [[Graph.connectedComponents]] label rows
+    * with node = comp — plus every id of the one-column `ids` frame that
+    * no edge touches (absent from the label frame). Shared by the
+    * near-dup, semantic and winnowing materializers.
     */
-  private[graft] def ccMinWinners(e0: DataFrame, idCol: String, maxRounds: Int,
-                                  collectEdgeThreshold: Long): DataFrame = {
-    val nEdges = e0.count()
-    // the edge bound is byte-aware: fixed-width ids keep the calibrated
-    // threshold; string ids sample their real width from the (persisted)
-    // edge frame — one slim agg, no extra corpus work
-    val avgIdBytes: Double = e0.schema.head.dataType match {
-      case org.apache.spark.sql.types.StringType if nEdges > 0 =>
-        e0.agg(avg(octet_length(col("ga")))).head.getDouble(0) + 48.0
-      case _ => 8.0
-    }
-
-    val spark = e0.sparkSession
-    if (nEdges <= driverEdgeBudget(collectEdgeThreshold, avgIdBytes)) {
-        lastCcRoute = "driver"
-        // id-type agnostic like every other Dedup entry point: ids compare
-        // through their external natural order, EXCEPT strings, which use
-        // UTF8String byte order so both CC routes pick the same minimum
-        // (java.lang.String order diverges on non-BMP code points)
-        def lt(a: Any, b: Any): Boolean = (a, b) match {
-          case (x: String, y: String) =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(x)
-              .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
-          case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
-        }
-        val parent = new java.util.HashMap[Any, Any]()
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x
-          while (parent.getOrDefault(c, c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        e0.collect().foreach { row =>
-          val ra = find(row.get(0))
-          val rb = find(row.get(1))
-          // union-by-min: roots only ever decrease, so the final root IS
-          // the component's minimum doc id
-          if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
-        }
-        val roots = new java.util.HashSet[Any]()
-        parent.keySet().forEach(n => { roots.add(find(n)); () })
-        // nodes never unioned under anything are their own root; they are
-        // not in `parent`, but they are winners via the untouched path or
-        // as roots of other nodes — collect explicit roots only
-        import scala.jdk.CollectionConverters._
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(idCol, e0.schema.head.dataType)))
-        spark.createDataFrame(
-          roots.asScala.toSeq.map(v => org.apache.spark.sql.Row(v)).asJava, schema)
-      } else {
-        lastCcRoute = "distributed"
-        val edges = e0.select(col("ga").as("src"), col("gb").as("dst"))
-          .unionByName(e0.select(col("gb").as("src"), col("ga").as("dst")))
-          // pre-partition on dst (the per-round join key below) so the
-          // cached frame's HashPartitioning propagates into every round's
-          // edge⋈labels equi-join — rounds add no edge exchange (guide
-          // §2.4; the r12 rep-words precedent)
-          .repartition(col("dst"))
-          .persist() // re-read every propagation round
-        Caches.register(edges)
-        val touched = edges.select(col("src").as("node")).distinct()
-        var labels = touched.select(col("node"), col("node").as("lbl")).localCheckpoint()
-        var changed = 1L
-        var rounds = 0
-        while (changed > 0 && rounds < maxRounds) {
-          val byNbr = edges
-            .join(labels.select(col("node").as("dst"), col("lbl").as("dlbl")), "dst")
-            .groupBy("src").agg(min(col("dlbl")).as("nlbl"))
-            .withColumnRenamed("src", "node")
-          val step1 = labels.join(byNbr, Seq("node"), "left")
-            .select(col("node"), col("lbl").as("old"),
-              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("l1"))
-          // pointer halving: also adopt the label OF the adopted label —
-          // this is what turns O(diameter) rounds into O(log diameter).
-          // The changed-count rides the checkpoint's materialization job as
-          // an observed metric — one job per round, not two (r13).
-          val obs = new org.apache.spark.sql.Observation()
-          val step2 = step1
-            .join(labels.select(col("node").as("ln"), col("lbl").as("llbl")),
-              step1("l1") === col("ln"), "left")
-            .select(col("node"), col("old"),
-              least(col("l1"), coalesce(col("llbl"), col("l1"))).as("lbl"))
-            .observe(obs, count(when(col("lbl") =!= col("old"), lit(1))).as("chg"))
-            .localCheckpoint()
-          changed = obs.get("chg").asInstanceOf[Long]
-          labels = step2.select("node", "lbl")
-          rounds += 1
-        }
-        require(changed == 0,
-          s"dropDuplicatesNear: min-label propagation did not converge in $maxRounds rounds")
-        labels.select(col("lbl").as(idCol)).distinct()
-      }
+  private[graft] def survivors(edges: DataFrame, ids: DataFrame, idCol: String,
+                               maxRounds: Int, collectEdgeThreshold: Long): DataFrame = {
+    val labels = Graph.connectedComponents(edges, "ga", "gb", maxRounds, collectEdgeThreshold)
+    labels.filter(col("node") === col("comp")).select(col("node").as(idCol))
+      .unionByName(ids.join(labels.select(col("node").as(idCol)), Seq(idCol), "left_anti"))
   }
 
   /** The persistent corpus near-dup INDEX: one row per DISTINCT word set —
@@ -853,7 +723,7 @@ object Dedup {
     *    spill-free path when the index dwarfs executor memory.
     *
     * `nestedLoopWorkBudget` default is the measured local[32] crossover
-    * region (ProbeRouteCrossover, PLANS.md r9): below ~10⁹ index×batch
+    * region (PLANS.md, Round-9 probe route planner): below ~10⁹ index×batch
     * cell evaluations the nested loop's zero-shuffle scan wins; above it
     * the banded route's collision-bounded work dominates. |index| counts
     * cheaply where the production shape needs it (a parquet-backed index
@@ -1082,7 +952,7 @@ object Dedup {
     *                        and corpus scale the exploded route's
     *                        bucket-bounded candidates win, and n is far past
     *                        the threshold anyway. The prefixSub
-    *                        bruteThreshold / ccMinWinners planner-split
+    *                        bruteThreshold / connectedComponents planner-split
     *                        precedent, applied to the embedding family.
     */
   def embedNearDupPairsLsh(vecs: DataFrame, idCol: String, vecCol: String,
@@ -1140,8 +1010,9 @@ object Dedup {
     * time exactly like IVF probe cost; pairs crossing cell boundaries are
     * out of scope BY DEFINITION (the published SemDeDup trade — raise
     * nlist for cheaper cells, lower it for higher recall). Centroids ride
-    * a broadcast; component election reuses [[ccMinWinners]] (byte-aware
-    * driver union-find small, pointer-halving label propagation at scale).
+    * a broadcast; component election runs on [[Graph.connectedComponents]]
+    * (byte-aware driver union-find small, pointer-halving label
+    * propagation at scale).
     *
     * Centroids come in pinned (train with [[Ann.trainIvfCentroids]] and
     * persist) so assignment is replayable — the oracle replays nearest-cell
@@ -1156,17 +1027,11 @@ object Dedup {
       vecs.select(col(idCol).as("vid"), col(vecCol).as("v")), centroids)
     val a = cells.select(col("cid"), col("vid").as("ga"), col("v").as("va"))
     val b = cells.select(col("cid"), col("vid").as("gb"), col("v").as("vb"))
-    val e0 = a.join(b, Seq("cid"))
+    val edges = a.join(b, Seq("cid"))
       .filter(col("ga") < col("gb"))
       .filter(NativeHash.cosine(col("va"), col("vb")) >= threshold)
       .select("ga", "gb")
-      .persist() // consumed by count + CC + the untouched-survivor anti-join
-    Caches.register(e0)
-    val winnersTouched = ccMinWinners(e0, idCol, maxRounds, collectEdgeThreshold)
-    val touched = e0.select(col("ga").as(idCol))
-      .unionByName(e0.select(col("gb").as(idCol))).distinct()
-    val winners = winnersTouched
-      .unionByName(vecs.select(col(idCol)).join(touched, Seq(idCol), "left_anti"))
+    val winners = survivors(edges, vecs.select(col(idCol)), idCol, maxRounds, collectEdgeThreshold)
     vecs.join(winners, idCol)
   }
 

@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   *  - `false` (default): the count joins probe the occurrence stream
   *    directly. While c₂/c₁ fit the broadcast threshold the occurrence
   *    frame NEVER shuffles — zero wide shuffles end to end — and the
-  *    FluencyScaleProbe A/B measures this faster at every available
-  *    scale (sf0.1: 0.8 s vs 1.9 s; deterministic ×10 sf1: 5.1 s vs
-  *    7.0 s warm).
+  *    A/B logged in PLANS.md (Round-6 deltas) measures this faster at
+  *    every available scale (sf0.1: 0.8 s vs 1.9 s; deterministic ×10
+  *    sf1: 5.1 s vs 7.0 s warm).
   *  - `true`: occurrences first REDUCE to per-(doc, w₁, w₂)
   *    multiplicities (one uniformly-keyed shuffle), and the vocab-keyed
   *    joins then move |distinct bigrams per doc| rows instead of the

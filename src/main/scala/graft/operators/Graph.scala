@@ -35,85 +35,103 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Connected components over an undirected edge set — the general
-    * per-node form of the cluster-materialization step every pairwise
-    * dedup family ends in (near-dup pairs → components → keep one per
-    * component; [[graft.operators.Dedup]]'s `ccMinWinners` is the
-    * winners-only sibling and this operator follows its distributed
-    * route exactly). Returns (node, comp) for every node incident to an
-    * edge, comp = the component's MINIMUM node id — the true transitive
-    * closure, a pure function of the edge set. Edges are symmetrized
-    * here; direction is ignored.
+  /** Connected components over an undirected edge set — the one
+    * connected-components engine in graft, and the cluster step every
+    * pairwise dedup family ends in (near-dup pairs → components → keep one
+    * per component: the winners are the label rows with node = comp, the
+    * touched set is the label frame's nodes). Returns (node, comp) for
+    * every node incident to an edge, comp = the component's MINIMUM node
+    * id — the true transitive closure, a pure function of the edge set.
+    * Edges are symmetrized here; direction and duplicates are ignored.
     *
-    * Each round does (1) a neighbor-min — m(v) = min(l(v), min over
-    * neighbors' labels) — and (2) pointer halving — adopt the label OF
-    * the adopted label (labels are always node ids, so the lookup always
-    * hits). Plain propagation needs O(diameter) rounds; the halving step
-    * collapses label chains geometrically, the pointer-jumping O(log
-    * diameter) bound. Rounds run until a fixed point (changed == 0 — one
-    * control-plane scalar per round), so the output is the exact
-    * components, and the SQL oracle replays the measured round count for
-    * its corpus.
-    *
-    * Component strategy, chosen like a planner would (the
-    * [[graft.operators.Dedup.ccMinWinners]] route-split precedent — both
-    * routes produce the identical label set, spec-asserted):
-    *  - distinct directed-edge count ≤ the byte-aware driver budget →
-    *    BOUNDED driver union-find (path compression, union-by-min), one
-    *    job instead of 3 jobs × rounds. Edges here are post-canonical
-    *    (rep pairs, sparsified trade pairs), i.e. the same bounded
-    *    control-plane class as the quantizer sample.
+    * Route, chosen like a planner would (both routes produce the
+    * identical label set, spec-asserted):
+    *  - edge count ≤ [[driverEdgeBudget]] → BOUNDED driver union-find
+    *    ([[unionFind]]), one collect instead of 3 jobs × rounds. Edges here
+    *    are post-canonical (rep pairs, verified pairs, sparsified trade
+    *    pairs), i.e. the same bounded control-plane class as the
+    *    quantizer sample.
     *  - above it → distributed min-label propagation, at 100 TB: per
     *    round one equi-join of the slim symmetric edge frame (persisted
     *    once, pre-partitioned on src so rounds add no edge exchange)
     *    against the (node, label) frame, one map-side-combined min, and a
     *    label-keyed self-join — all shuffle on node keys and AQE-coalesce.
+    *    Each round does (1) a neighbor-min — m(v) = min(l(v), min over
+    *    neighbors' labels) — and (2) pointer halving — adopt the label OF
+    *    the adopted label (labels are always node ids, so the lookup
+    *    always hits). Plain propagation needs O(diameter) rounds; the
+    *    halving step collapses label chains geometrically, the
+    *    pointer-jumping O(log diameter) bound. Rounds run until a fixed
+    *    point (changed == 0), so the output is the exact components, and
+    *    the SQL oracle replays the measured round count for its corpus.
     *    Each round `localCheckpoint`s the label frame: lineage stays
     *    constant-depth (an unbounded iterative plan tree is both an
     *    optimizer-time and a stack-depth bomb) and superseded blocks are
     *    released by the ContextCleaner; the convergence count rides the
     *    checkpoint job as an observed metric (r13 — one job per round,
     *    not two). Nothing graph-sized ever reaches the driver.
+    *
+    * The route decision is ONE aggregate over the persisted edge frame:
+    * the edge count for fixed-width ids, the count plus the mean UTF-8
+    * width of both endpoints for string ids (the width must be known
+    * before anything is collected). Duplicate edges are not removed
+    * first — both routes accept them, and a raw count can only push the
+    * choice toward the distributed route.
     */
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
+                          maxRounds: Int = 50,
+                          collectEdgeThreshold: Long = 1L << 22): DataFrame = {
+    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+    val dir0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
+    Caches.register(dir0)
+    val (nEdges, bytesPerEdge) =
+      if (dir0.schema.exists(_.dataType == org.apache.spark.sql.types.StringType)) {
+        val r = dir0.agg(count(lit(1)),
+          avg(octet_length(col("src")) + octet_length(col("dst")))).head
+        (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1) + 2 * StringIdOverheadBytes)
+      } else (dir0.count(), LongEdgeBytes)
+    if (nEdges <= driverEdgeBudget(collectEdgeThreshold, bytesPerEdge)) {
+      lastCcRoute = "driver"
+      ccDriverLabels(dir0)
+    } else {
+      lastCcRoute = "distributed"
+      ccDistributedLabels(dir0, maxRounds)
+    }
+  }
+
   /** Which route the last [[connectedComponents]] call took ("driver" |
     * "distributed") — test observability for the planner split; never read
     * it concurrently with running jobs.
     */
   @volatile private[graft] var lastCcRoute: String = ""
 
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxRounds: Int = 50,
-                          collectEdgeThreshold: Long = 1L << 22): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val dir0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // directed-distinct first: the route decision and a driver collect both
-    // run on the smallest exact frame (symmetrization only doubles it)
-    val dirD = dir0.distinct().persist()
-    Caches.register(dirD)
-    val nEdges = dirD.count()
-    // byte-aware budget, same calibration as ccMinWinners: string ids
-    // sample their real width so the bound tracks bytes, not edge count
-    val avgIdBytes: Double = dirD.schema.head.dataType match {
-      case org.apache.spark.sql.types.StringType if nEdges > 0 =>
-        dirD.agg(avg(octet_length(col("src")))).head.getDouble(0) + 48.0
-      case _ => 8.0
-    }
-    if (nEdges <= Dedup.driverEdgeBudget(collectEdgeThreshold, avgIdBytes)) {
-      lastCcRoute = "driver"
-      ccDriverLabels(dirD)
-    } else {
-      lastCcRoute = "distributed"
-      ccDistributedLabels(dirD, maxRounds)
-    }
-  }
-
-  /** Driver union-find over a collected bounded edge frame, emitting the
-    * FULL (node, comp) labeling (ccMinWinners emits roots only). Ids
-    * compare through their external natural order, except strings, which
-    * use UTF8String byte order so both routes pick the same minimum.
+  /** Bytes per edge `collectEdgeThreshold` is calibrated for: two 8-byte
+    * ids, ≈ 64 MB of driver control plane at the 4M default.
     */
-  private def ccDriverLabels(dirD: DataFrame): DataFrame = {
-    val spark = dirD.sparkSession
+  private val LongEdgeBytes = 16.0
+
+  /** JVM String + hash-entry cost per stored string id, on top of its
+    * UTF-8 width — far above the width itself for short ids.
+    */
+  private val StringIdOverheadBytes = 48.0
+
+  /** Effective driver-collect edge budget for the union-find route: the
+    * calibrated `collectEdgeThreshold` shrinks in proportion once an edge
+    * costs more than [[LongEdgeBytes]] (string URLs / UUIDs, or extra
+    * payload collected with each edge), so the bound tracks BYTES, not
+    * edge count.
+    */
+  private[graft] def driverEdgeBudget(collectEdgeThreshold: Long, bytesPerEdge: Double): Long =
+    (collectEdgeThreshold * LongEdgeBytes / math.max(LongEdgeBytes, bytesPerEdge)).toLong
+
+  /** Driver union-find (path compression, union-by-min) over a bounded
+    * edge stream: (node, comp) for every node of an edge, in first-seen
+    * order, comp = the component's minimum id. Ids compare through their
+    * external natural order, except strings, which use UTF8String byte
+    * order so the driver and distributed routes pick the same minimum
+    * (java.lang.String order diverges on non-BMP code points).
+    */
+  private[graft] def unionFind(edges: Iterator[(Any, Any)]): Seq[(Any, Any)] = {
     def lt(a: Any, b: Any): Boolean = (a, b) match {
       case (x: String, y: String) =>
         org.apache.spark.unsafe.types.UTF8String.fromString(x)
@@ -129,8 +147,7 @@ object Graph {
       while (parent.getOrDefault(c, c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    dirD.collect().foreach { row =>
-      val (a, b) = (row.get(0), row.get(1))
+    edges.foreach { case (a, b) =>
       nodes.add(a); nodes.add(b)
       val ra = find(a)
       val rb = find(b)
@@ -139,22 +156,31 @@ object Graph {
       if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
     }
     import scala.jdk.CollectionConverters._
-    val dt = dirD.schema.head.dataType
+    nodes.asScala.toSeq.map(n => (n, find(n)))
+  }
+
+  /** The driver route: collect the bounded edge frame and label it with
+    * [[unionFind]].
+    */
+  private def ccDriverLabels(dir0: DataFrame): DataFrame = {
+    val spark = dir0.sparkSession
+    val dt = dir0.schema.head.dataType
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", dt),
       org.apache.spark.sql.types.StructField("comp", dt)))
-    val rows = nodes.asScala.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
+    val rows = unionFind(dir0.collect().iterator.map(r => (r.get(0), r.get(1))))
+      .map { case (n, c) => org.apache.spark.sql.Row(n, c) }
     // parallelize (not a LocalRelation): the label frame is node-sized and
     // feeds joins — keep it distributed like the propagation route's output
     val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.size / 8192 + 1))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
   }
 
-  /** Min-label propagation with pointer halving over the directed-distinct
-    * edge frame — the at-scale route; see [[connectedComponents]].
+  /** Min-label propagation with pointer halving — the at-scale route; see
+    * [[connectedComponents]].
     */
-  private def ccDistributedLabels(dirD: DataFrame, maxRounds: Int): DataFrame = {
-    val e = dirD.union(dirD.select(col("dst").as("src"), col("src").as("dst")))
+  private def ccDistributedLabels(dir0: DataFrame, maxRounds: Int): DataFrame = {
+    val e = dir0.union(dir0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       // one extra slim shuffle at build so HashPartitioning(src) is cached:
       // the per-round edge⋈labels equi-join then never re-exchanges the

@@ -109,10 +109,9 @@ object Winnow {
     * corpus-sized gram-set frame joins the slim candidate pairs by id (at
     * 100 TB the pair side is candidate-sized and broadcast-eligible, and
     * only candidate docs' arrays survive the join); clustering runs on
-    * verified pairs through the shared [[Dedup.ccMinWinners]] engine
-    * (byte-aware driver union-find small, pointer-halving label
-    * propagation at scale). Document bodies move once, into the winners
-    * join.
+    * verified pairs through [[Graph.connectedComponents]] (byte-aware
+    * driver union-find small, pointer-halving label propagation at
+    * scale). Document bodies move once, into the winners join.
     */
   def keepAfterVerify(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 4, w: Int = 4, dfCap: Int = 1000,
@@ -127,19 +126,13 @@ object Winnow {
     // gram (fingerprint selection requires it), so min-size is never 0
     val grams = docs.select(col(idCol).as("__gid"),
       sort_array(array_distinct(NativeHash.tokenGramHashes(col(textCol), k))).as("__g"))
-    val e0 = cand
+    val verified = cand
       .join(grams.select(col("__gid").as("__ia"), col("__g").as("__set_a")), "__ia")
       .join(grams.select(col("__gid").as("__ib"), col("__g").as("__set_b")), "__ib")
       .filter(NativeHash.sortedIntersectSize(col("__set_a"), col("__set_b")).cast("double") >=
         lit(threshold) * least(size(col("__set_a")), size(col("__set_b"))).cast("double"))
       .select(col("__ia").as("ga"), col("__ib").as("gb"))
-      .persist() // consumed by count + CC + the untouched-survivor anti-join
-    Caches.register(e0)
-    val winners = Dedup.ccMinWinners(e0, idCol, maxRounds, collectEdgeThreshold)
-    val touched = e0.select(col("ga").as(idCol))
-      .unionByName(e0.select(col("gb").as(idCol))).distinct()
-    val all = winners.unionByName(
-      docs.select(col(idCol)).join(touched, Seq(idCol), "left_anti"))
-    docs.join(all, idCol)
+    docs.join(Dedup.survivors(verified, docs.select(col(idCol)), idCol, maxRounds,
+      collectEdgeThreshold), idCol)
   }
 }

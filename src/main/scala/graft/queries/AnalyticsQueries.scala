@@ -1578,8 +1578,6 @@ object AnalyticsQueries {
       .filter(col("q") >= 80)
       .select(concat(lit("c"), col("o_custkey").cast("string")).as("src"),
         concat(lit("s"), col("l_suppkey").cast("string")).as("dst"))
-      .persist() // both symmetrization legs read it (r12: o⋈l+agg ran twice)
-    graft.operators.Caches.register(edges)
     val labels = graft.operators.Graph.connectedComponents(edges, "src", "dst")
     labels.join(labels.groupBy("comp").agg(count(lit(1)).as("csize")), "comp")
       .select(col("node"), col("comp"), col("csize"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.GraftSession.table
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Ann, Curation, Dedup, Winnow}
+import graft.operators.{Ann, Curation, Dedup, Graph, Winnow}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -316,39 +316,23 @@ object LlmQueries {
     val rp = sub.repPairs
       .select(col("id_a").as("ga"), col("id_b").as("gb"), col("jaccard")).persist()
     graft.operators.Caches.register(rp)
-    // r13 (the ccMinWinners driver-route precedent, §5 fewer driver
-    // round-trips): the rep-pair set is SET-GRAIN bounded, and all three
-    // thresholds need only components/touched counts over subsets of it —
-    // under the byte-aware budget, ONE collect + three driver union-finds
-    // replace ~15 control-plane jobs (3 × [edge persist, distinct+count,
-    // collect, ncomp agg, touched distinct agg, crossjoins]). Above the
-    // budget the per-threshold distributed route runs unchanged; both
-    // routes are spec-asserted row-equal on the real corpus.
+    // r13 (§5 fewer driver round-trips): the rep-pair set is SET-GRAIN
+    // bounded, and all three thresholds need only components/touched
+    // counts over subsets of it — under the byte-aware budget, ONE collect
+    // + three runs of the engine's driver union-find replace ~15
+    // control-plane jobs. Above the budget each threshold runs
+    // Graph.connectedComponents; both routes are spec-asserted row-equal
+    // on the real corpus.
     val nPairs = rp.count()
     val nSetsScalar = sub.skel.count()
     val thresholds = Seq(0.7, 0.8, 0.9)
-    if (nPairs <= Dedup.driverEdgeBudget(collectEdgeThreshold, 8.0 + 8.0)) {
+    // a collected pair is two long ids plus its jaccard double: 24 bytes
+    if (nPairs <= Graph.driverEdgeBudget(collectEdgeThreshold, bytesPerEdge = 24.0)) {
       val pairs = rp.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       val rows = thresholds.map { t =>
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x
-          while (parent.getOrDefault(c, c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        val touched = new java.util.HashSet[Long]()
-        pairs.foreach { case (a, b, j) =>
-          if (j >= t) {
-            touched.add(a); touched.add(b)
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-          }
-        }
-        var ncomp = 0L
-        touched.forEach(n => if (find(n) == n) ncomp += 1)
-        org.apache.spark.sql.Row(t, nSetsScalar - touched.size + ncomp)
+        val labels = Graph.unionFind(pairs.iterator.collect { case (a, b, j) if j >= t => (a, b) })
+        val ncomp = labels.count { case (n, c) => n == c }
+        org.apache.spark.sql.Row(t, nSetsScalar - labels.size + ncomp)
       }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("threshold", org.apache.spark.sql.types.DoubleType, nullable = false),
@@ -357,13 +341,11 @@ object LlmQueries {
     } else {
       val nSets = sub.skel.agg(count(lit(1)).as("n_sets"))
       thresholds.map { t =>
-        val e0 = rp.filter(col("jaccard") >= t).select("ga", "gb").persist()
-        graft.operators.Caches.register(e0)
-        val comps = Dedup.ccMinWinners(e0, "g", maxRounds = 50,
-          collectEdgeThreshold = collectEdgeThreshold).agg(count(lit(1)).as("ncomp"))
-        val touched = e0.select(col("ga").as("k")).unionByName(e0.select(col("gb").as("k")))
-          .distinct().agg(count(lit(1)).as("touched"))
-        nSets.crossJoin(comps).crossJoin(touched)
+        val labels = Graph.connectedComponents(rp.filter(col("jaccard") >= t), "ga", "gb",
+          collectEdgeThreshold = collectEdgeThreshold)
+        val counts = labels.agg(count(lit(1)).as("touched"),
+          count(when(col("node") === col("comp"), lit(1))).as("ncomp"))
+        nSets.crossJoin(counts)
           .select(lit(t).as("threshold"),
             (col("n_sets") - col("touched") + col("ncomp")).as("n_kept"))
       }.reduce(_.unionByName(_)).orderBy("threshold")
@@ -1036,7 +1018,7 @@ object LlmQueries {
       .orderBy("id_a", "id_b")
 
   /** The PRODUCTION embed-LSH posture — 8 tables × 16 planes, the config
-    * every scale run ships (`EmbedScaleProbe`: 2¹⁶ buckets/table keeps
+    * every scale run ships (PLANS.md, Round-6 deltas: 2¹⁶ buckets/table keeps
     * bucket occupancy — and with it per-task candidate work — O(corpus/
     * buckets); recall ≈ 0.97 on cosine-0.98 planted twins, measured ≥ 0.95).
     * Unlike the oracle-forced 32×2 twin above (4 buckets/table ⇒ (n/4)²

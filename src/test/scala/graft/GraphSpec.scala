@@ -222,6 +222,29 @@ class GraphSpec extends SparkSpec {
     assert(labels("z3") === "z1" && labels("n13") === "n00")
   }
 
+  test("cc route check on string ids is one aggregate, then the driver collect") {
+    // under AQE the aggregate over the freshly persisted edge frame is
+    // three jobs (cache fill, partial-agg map stage, result); the collect
+    // is the fourth. A separate distinct, count or width job would add more
+    val g = Seq("a" -> "b", "b" -> "c", "x" -> "y", "a" -> "b")
+    val (labels, jobs) = jobsStartedBy(Graph.connectedComponents(g.toDF("src", "dst"), "src", "dst"))
+    assert(Graph.lastCcRoute === "driver")
+    assert(labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap === ccTrue(g))
+    graft.operators.Caches.release()
+    assert(jobs === 4, s"connectedComponents started $jobs jobs")
+  }
+
+  test("cc budget counts the bytes of both endpoints, whichever column is wide") {
+    // 4 edges of 2-byte ids against ~190-byte ids: at 32 edges' budget the
+    // narrow ids alone would fit (≈ 5 edges), the real edge width does not
+    val wide = "w" * 190
+    val g = Seq("a0" -> s"${wide}0", "a1" -> s"${wide}0", "a1" -> s"${wide}1", "a2" -> s"${wide}1")
+    for (edges <- Seq(g, g.map(_.swap))) {
+      assert(runCc(edges, collectEdgeThreshold = 32L) === ccTrue(edges))
+      assert(Graph.lastCcRoute === "distributed", s"wide endpoint ignored for $edges")
+    }
+  }
+
   test("cc on the real trade graph equals driver union-find (the registry edge rule)") {
     val e = GraftSession.table(spark, "/root/testdata/sf0.01", "orders")
       .join(GraftSession.table(spark, "/root/testdata/sf0.01", "lineitem"),

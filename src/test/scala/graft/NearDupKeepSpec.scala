@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Caches, Dedup}
+import graft.operators.{Caches, Dedup, Graph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -118,10 +118,11 @@ class NearDupKeepSpec extends SparkSpec {
   }
 
   test("edge budget is byte-aware: wide string ids engage the distributed route") {
-    // budget math: 8-byte ids keep the calibrated threshold; string ids
-    // shrink it by (utf8 width + JVM overhead) / 8
-    assert(Dedup.driverEdgeBudget(1L << 22, 8.0) == (1L << 22))
-    assert(Dedup.driverEdgeBudget(1L << 22, 148.0) < (1L << 22) / 16)
+    // budget math (bytes per edge): two 8-byte ids keep the calibrated
+    // threshold; string ids shrink it by (utf8 width + JVM overhead) / 8
+    // per endpoint
+    assert(Graph.driverEdgeBudget(1L << 22, 2 * 8.0) == (1L << 22))
+    assert(Graph.driverEdgeBudget(1L << 22, 2 * 148.0) < (1L << 22) / 16)
 
     // same cluster shape twice, same tiny edge count, same threshold — the
     // only difference is id WIDTH. Long ids fit the 8-edge budget (driver
@@ -135,11 +136,11 @@ class NearDupKeepSpec extends SparkSpec {
 
     val keptLong = Dedup.dropDuplicatesNear(longIds, "id", "text", 0.8, collectEdgeThreshold = 8L)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val longRoute = Dedup.lastCcRoute
+    val longRoute = Graph.lastCcRoute
     Caches.release()
     val keptWide = Dedup.dropDuplicatesNear(wideIds, "id", "text", 0.8, collectEdgeThreshold = 8L)
       .select("id").collect().map(_.getString(0)).toSeq
-    val wideRoute = Dedup.lastCcRoute
+    val wideRoute = Graph.lastCcRoute
     Caches.release()
     assert(longRoute == "driver", s"8-byte ids within the edge budget should collect, took $longRoute")
     assert(wideRoute == "distributed", s"wide ids must engage the distributed route, took $wideRoute")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Winnow
+import graft.operators.{Graph, Winnow}
 import org.apache.spark.sql.functions._
 
 /** Winnowing fingerprints (`Winnow.fingerprints`, Schleimer et al. 2003):
@@ -175,11 +175,21 @@ class WinnowSpec extends SparkSpec {
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
     val want = ids.filter(id => find(id) == id).toSet
-    val got = Winnow.keepAfterVerify(rows.toDF("doc_id", "text"), "doc_id", "text",
-        K, W, dfCap = 1000, minShared = 2, threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    graft.operators.Caches.release()
+    def kept(collectEdgeThreshold: Long): Set[Long] = {
+      val out = Winnow.keepAfterVerify(rows.toDF("doc_id", "text"), "doc_id", "text",
+          K, W, dfCap = 1000, minShared = 2, threshold = 0.5,
+          collectEdgeThreshold = collectEdgeThreshold)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      graft.operators.Caches.release()
+      out
+    }
+    // both connected-components routes keep the same documents
+    val viaLoop = kept(0L)
+    assert(Graph.lastCcRoute === "distributed")
+    val got = kept(1L << 22)
+    assert(Graph.lastCcRoute === "driver")
     assert(got === want)
+    assert(viaLoop === got)
   }
 
   test("operator matches the reference model on the real documents table") {
