@@ -3,6 +3,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   type Q = (SparkSession, String) => DataFrame
 
+  /** Evaluates `df` down to its last column: a `noop` write runs the whole
+    * plan, where a count() lets Catalyst prune the columns (and the work)
+    * nobody counts.
+    */
+  def evaluate(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -66,10 +72,6 @@ object Bench {
     graft.operators.Dedup.materializedSubstrate(spark, sfDir, 4, 5)
     graft.operators.Caches.release()
 
-    // every frame is evaluated down to its last column: a `noop` write runs
-    // the whole plan, where a count() lets Catalyst prune the columns (and
-    // the work) nobody counts
-    def evaluate(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     // JIT/codegen warmup: run every query once on the SMALLEST scale factor
     // (negligible data, same generated code paths) so timing at the target
     // SF starts compiled — C2 can otherwise still be compiling in run 2

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: time one registered query N times at a target SF and print its
+/** Dev tool: time registered queries N times at a target SF, each fully
+  * evaluated with [[Bench.evaluate]]'s `noop` write, and print each one's
   * formatted physical plan — for reconciling driver-bench regressions
   * (`runMain graft.Diag <name>[,<name>...] <sfDir> <cpus> [runs]`).
   */
@@ -20,12 +21,13 @@ object Diag {
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      // warmup at sf0.001 like Bench does
-      try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
+      // warmup on the sibling sf0.001 tables like Bench does
+      try Bench.evaluate(fn(spark, new java.io.File(new java.io.File(sfDir).getParentFile,
+        "sf0.001").getPath)) catch { case _: Throwable => () }
       graft.operators.Caches.release()
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        Bench.evaluate(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       graft.operators.Caches.release()

@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Unpersist operator-internal caches — see [[Caches.release]]. */
-  def releaseCaches(): Unit = Caches.release()
-
   /** Exact duplicate groups by content fingerprint. One groupBy shuffle with
     * map-side combine; at 100 TB the md5 keys shuffle, not the documents.
     * `n_docs`/`keep_id` are exact; the `doc_ids` audit sample carries only
@@ -119,24 +116,28 @@ object Dedup {
       .distinct()
   }
 
-  /** Canonicalized distinct-word-set view of a corpus plus its verified
-    * near-dup rep-pair graph — the shared substrate of [[nearDupPairs]] and
-    * [[dropDuplicatesNear]]. Since r12 the set identity is the GROUP-MIN
-    * doc id `g` (a long on the standard corpus), mirroring [[PrefixSub]]:
-    * every pairwise stage and every consumer relabel runs on narrow keys
-    * (guide §2.3), and `groups` is hash-partitioned by `g` so downstream
-    * aggregates/joins inherit the partitioning (guide §2.4).
+  /** A corpus canonicalized to its DISTINCT word (or shingle) sets plus the
+    * verified near-dup rep-pair graph between them — the one substrate of
+    * the minhash family ([[setGraph]]: [[nearDupPairs]],
+    * [[dropDuplicatesNear]], …) and the exact prefix-filter family
+    * ([[prefixSub]]: [[prefixFilterPairs]], [[clusterSubstrate]], …), built
+    * by [[canonicalSets]]. Since r12 the set identity is the GROUP-MIN doc
+    * id `g` (a long on the standard corpus): every pairwise stage and every
+    * consumer relabel runs on narrow keys (guide §2.3), and `groups` is
+    * hash-partitioned by `g` so downstream aggregates/joins inherit the
+    * partitioning (guide §2.4).
     *
     * @param keyed    (id, g) per document — slim, persisted; NO word
     *                 arrays and no per-group id arrays ever materialize in a
     *                 row (a 10⁸-copy boilerplate group must never become one
-    *                 10⁸-element executor row)
+    *                 10⁸-element executor row). Docs whose set key is null
+    *                 never pair and carry no row.
     * @param skel     (g, n) per DISTINCT word set — member counts
     * @param groups   (g, words) per DISTINCT word set; words are re-derived
     *                 from the one representative doc, so the full-corpus
     *                 tokenization pass runs exactly once
-    * @param repPairs (id_a, id_b, jaccard) over g — exact-jaccard
-    *                 verified LSH candidates between distinct sets
+    * @param repPairs (id_a, id_b, jaccard) over g, id_a < id_b — exact
+    *                 verified pairs between distinct sets
     */
   private[graft] final case class SetGraph(keyed: DataFrame, skel: DataFrame,
                                            groups: DataFrame, repPairs: DataFrame)
@@ -153,97 +154,155 @@ object Dedup {
     // NativeHashSpec), which evaluates interpreted
     else c => graft.plans.NativeHash.shingleSetSep(c, shingleN, "\u0001")
 
-  private[graft] def setGraph(docs: DataFrame, idCol: String, textCol: String,
-                              threshold: Double, bands: Int, r: Int, shingleN: Int,
-                              broadcastThreshold: Long): SetGraph = {
-    val units = setUnits(shingleN)
+  /** The md5 content key of a text's canonical (sorted distinct) unit set. */
+  private[graft] def setKey(text: Column, shingleN: Int): Column =
+    md5(array_join(sort_array(setUnits(shingleN)(text)), " "))
+
+  /** Canonicalization — identical word sets collapse before any pairwise
+    * work. Builds the [[SetGraph]] frames and hands the persisted
+    * (set_key, g, n) skeleton and the `groups` frame to `repPairs`, the
+    * family's candidate + verify step (which also runs its own route-choice
+    * count: this function starts no job).
+    */
+  private def canonicalSets(docs: DataFrame, idCol: String, textCol: String, shingleN: Int)(
+      repPairs: (DataFrame, DataFrame) => DataFrame): SetGraph = {
     // layout-capped scans rebalance up to the session parallelism (r13):
-    // identity at real scan widths (GraftSession.rebalanceScan)
+    // the tokenize+md5 pass below otherwise runs on however few tasks the
+    // file layout yields (1 on single-row-group test files) — identity at
+    // real scan widths (GraftSession.rebalanceScan)
     val docsW = graft.GraftSession.rebalanceScan(docs)
     // pass 1 — the only full-corpus tokenization: every doc collapses to its
-    // set identity. Only the slim (id, set_key) projection persists; the
-    // md5 content key never rides a pairwise shuffle (r12 — the PrefixSub
-    // long-grain contract).
-    val keyedMd5 = docsW.select(
-      col(idCol).as("id"),
-      md5(array_join(sort_array(units(col(textCol))), " ")).as("set_key"))
+    // set identity. Only the slim (id, set_key) projection persists (read by
+    // the skeleton agg AND the id→g attach); the md5 content key never rides
+    // a pairwise shuffle (r12).
+    val keyedMd5 = docsW.select(col(idCol).as("id"), setKey(col(textCol), shingleN).as("set_key"))
       .persist()
     Caches.register(keyedMd5)
     // group skeleton: min id + size per distinct set — pure min/count agg,
     // bounded state under ANY duplication factor (no collect_list)
     val skelMd5 = keyedMd5.groupBy("set_key")
       .agg(min(col("id")).as("g"), count(lit(1)).as("n"))
-      .persist()
+      .persist() // read by keyed attach, groups build, and skel consumers
     Caches.register(skelMd5)
     val keyed = keyedMd5.join(skelMd5.select("set_key", "g"), "set_key")
       .select(col("id"), col("g"))
       .persist()
     Caches.register(keyed)
-    val skel = skelMd5.select("g", "n")
-    // rep words: tokenization re-runs only for the one representative doc of
-    // each distinct set; representative bodies move once through this join.
-    // repartition(g) is load-bearing: the cached HashPartitioning(g)
-    // propagates through the banded-route signature explode, the candidate
-    // distinct and the verify joins (guide §2.4; measured on the PrefixSub
-    // sibling: 8.7 s → 2.5 s warm chain without/with the partitioning).
+    // rep words: tokenization re-runs only for the one representative doc
+    // of each distinct set — keyed by the LONG g from here on.
+    // The repartition(g) is load-bearing (guide §2.4 "share one exchange"):
+    // the cached frame's HashPartitioning(g) propagates through the whole
+    // pairwise chain — the banded-route signature explode, the prefix
+    // route's collect_list agg, the candidate distinct (id_a = the streamed
+    // side's g, and a hash partitioning on a SUBSET of the grouping keys
+    // satisfies ClusteredDistribution), and the verify/expansion joins on
+    // id_a — so NONE of them re-shuffle. Without it the join above can
+    // broadcast the skeleton side, the cached frame inherits the docs
+    // scan's unknown partitioning, and every downstream stage pays its own
+    // exchange of a multi-million-row pair stream (measured on the prefix
+    // route: the 4/5 warm chain 3.2 s with the partitioning vs 8.7 s
+    // without; one slim rep-words shuffle buys exchange-free descendants).
+    val units = setUnits(shingleN)
     val groups = skelMd5.select(col("g"))
       .join(docs.select(col(idCol).as("g"), col(textCol).as("__text")), "g")
       .select(col("g"), sort_array(units(col("__text"))).as("words"))
       .repartition(col("g"))
       .persist()
     Caches.register(groups)
+    SetGraph(keyed, skelMd5.select("g", "n"), groups, repPairs(skelMd5, groups))
+  }
 
-    // Candidate strategy on the distinct sets, chosen like a planner would:
-    // few reps → all-pairs broadcast join probing (size-ratio, band-key
-    // overlap) INSIDE the join condition — the candidate stream stays slim
-    // (two keys), no word arrays ride the O(n²) scan; many reps → banded
-    // LSH bucket join. Both evaluate the same predicate ("∃ agreeing band
-    // key" ∩ size-compatible), so the candidate set — and therefore the
-    // verified result — never depends on the route taken. Word arrays join
-    // back only for the verify step.
-    val nReps = groups.count() // also materializes the persisted frame
-    val broadcastable = nReps <= broadcastThreshold
-    val candidates: DataFrame =
-      if (broadcastable) {
-        val sets = groups.select(col("g"), size(col("words")).as("sz"),
-          bandKeys(NativeHash.minhashSignature(array_join(col("words"), " "), bands * r),
-            bands, r).as("sig"))
-        // probe side repartitioned so the O(nReps²) pair scan parallelizes
-        // across all cores (the persisted groups frame is few-partition)
-        val a = sets.select(col("g").as("id_a"), col("sz").as("sz_a"), col("sig").as("sig_a"))
-          .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        val b = sets.select(col("g").as("id_b"), col("sz").as("sz_b"), col("sig").as("sig_b"))
-        a.join(broadcast(b),
-            col("id_a") < col("id_b") &&
-            // size-ratio prune (j ≥ t ⇒ min|set| ≥ t·max|set|): cheap int
-            // compare eliminates pairs before the signature probe
-            least(col("sz_a"), col("sz_b")).cast("double") >=
-              lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double") &&
-            arrays_overlap(col("sig_a"), col("sig_b")))
-          .select("id_a", "id_b")
-      } else {
-        val reps = groups.select(col("g").as("id"), array_join(col("words"), " ").as("text"))
-        minhashCandidates(reps, "id", "text", bands, r)
-      }
-    val maybeBroadcast: DataFrame => DataFrame = if (broadcastable) broadcast else identity
-    val repPairs = candidates
-      .join(maybeBroadcast(groups.select(col("g").as("id_a"), col("words").as("words_a"))), "id_a")
-      .join(maybeBroadcast(groups.select(col("g").as("id_b"), col("words").as("words_b"))), "id_b")
-      .filter(least(size(col("words_a")), size(col("words_b"))).cast("double") >=
-        lit(threshold) * greatest(size(col("words_a")), size(col("words_b"))).cast("double"))
-      // single-scan threshold + count: −1 (failing pairs bail mid-merge —
-      // candidates are recall-biased, so most do) or the exact |A∩B|;
-      // passing pairs pay exactly one full merge, same as the plain
-      // intersect. |A∪B| = |A|+|B|−|A∩B| — no union array (words_* are
-      // sorted+distinct by canonicalization).
-      .withColumn("__i", NativeHash.sortedIntersectGe(col("words_a"), col("words_b"), threshold))
+  /** Exact jaccard over the sorted distinct unit arrays `wa`/`wb` of each
+    * row; keeps rows with jaccard ≥ threshold and adds the `jaccard` column.
+    * Single-scan threshold + count: −1 (failing pairs bail mid-merge —
+    * candidates are recall-biased, so most do) or the exact |A∩B|; passing
+    * pairs pay exactly one full merge, same as the plain intersect.
+    * |A∪B| = |A|+|B|−|A∩B| — no union array (the arrays are sorted+distinct
+    * by canonicalization).
+    */
+  private def withJaccard(pairs: DataFrame, wa: String, wb: String, threshold: Double): DataFrame =
+    pairs
+      .withColumn("__i", NativeHash.sortedIntersectGe(col(wa), col(wb), threshold))
       .filter(col("__i") >= 0)
       .withColumn("jaccard",
-        col("__i").cast("double") /
-          (size(col("words_a")) + size(col("words_b")) - col("__i")).cast("double"))
-      .select("id_a", "id_b", "jaccard")
-    SetGraph(keyed, skel, groups, repPairs)
+        col("__i").cast("double") / (size(col(wa)) + size(col(wb)) - col("__i")).cast("double"))
+
+  /** The exact verify of candidate rep pairs (id_a, id_b): word arrays join
+    * back from `groups` (through `side`, e.g. a broadcast hint), optionally
+    * size-ratio pruned (j ≥ t ⇒ min|set| ≥ t·max|set|) before the
+    * [[withJaccard]] merge scan. Returns (id_a, id_b, jaccard).
+    */
+  private def verifyPairs(candidates: DataFrame, groups: DataFrame, threshold: Double,
+                          side: DataFrame => DataFrame = identity,
+                          sizePrune: Boolean = false): DataFrame = {
+    val joined = candidates
+      .join(side(groups.select(col("g").as("id_a"), col("words").as("words_a"))), "id_a")
+      .join(side(groups.select(col("g").as("id_b"), col("words").as("words_b"))), "id_b")
+    val pruned =
+      if (!sizePrune) joined
+      else joined.filter(least(size(col("words_a")), size(col("words_b"))).cast("double") >=
+        lit(threshold) * greatest(size(col("words_a")), size(col("words_b"))).cast("double"))
+    withJaccard(pruned, "words_a", "words_b", threshold).select("id_a", "id_b", "jaccard")
   }
+
+  /** Rep pairs → doc pairs (id_a < id_b, jaccard): cross-group pairs are
+    * rep pairs × member ids via two equi-joins on the slim (id, g) frame;
+    * identical-set pairs (jaccard exactly 1.0, unless `identical` is
+    * false) come from a self equi-join on the set identity — singleton
+    * groups drop out naturally. Joins, not collect_list + explode, so no
+    * executor row ever holds a per-group id array.
+    */
+  private[graft] def docPairs(g: SetGraph, identical: Boolean = true): DataFrame = {
+    val cross = g.repPairs
+      .join(g.keyed.select(col("g").as("id_a"), col("id").as("ia")), "id_a")
+      .join(g.keyed.select(col("g").as("id_b"), col("id").as("ib")), "id_b")
+      .select(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
+    val intra = g.keyed.as("a")
+      .join(g.keyed.as("b"), col("a.g") === col("b.g") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), lit(1.0).as("jaccard"))
+    if (identical) cross.unionByName(intra) else cross
+  }
+
+  private[graft] def setGraph(docs: DataFrame, idCol: String, textCol: String,
+                              threshold: Double, bands: Int, r: Int, shingleN: Int,
+                              broadcastThreshold: Long): SetGraph =
+    canonicalSets(docs, idCol, textCol, shingleN) { (_, groups) =>
+      // Candidate strategy on the distinct sets, chosen like a planner would:
+      // few reps → all-pairs broadcast join probing (size-ratio, band-key
+      // overlap) INSIDE the join condition — the candidate stream stays slim
+      // (two keys), no word arrays ride the O(n²) scan; many reps → banded
+      // LSH bucket join. Both evaluate the same predicate ("∃ agreeing band
+      // key" ∩ size-compatible), so the candidate set — and therefore the
+      // verified result — never depends on the route taken. Word arrays join
+      // back only for the verify step.
+      val nReps = groups.count() // also materializes the persisted frame
+      val broadcastable = nReps <= broadcastThreshold
+      val candidates: DataFrame =
+        if (broadcastable) {
+          val sets = groups.select(col("g"), size(col("words")).as("sz"),
+            bandKeys(NativeHash.minhashSignature(array_join(col("words"), " "), bands * r),
+              bands, r).as("sig"))
+          // probe side repartitioned so the O(nReps²) pair scan parallelizes
+          // across all cores (the persisted groups frame is few-partition)
+          val a = sets.select(col("g").as("id_a"), col("sz").as("sz_a"), col("sig").as("sig_a"))
+            .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+          val b = sets.select(col("g").as("id_b"), col("sz").as("sz_b"), col("sig").as("sig_b"))
+          a.join(broadcast(b),
+              col("id_a") < col("id_b") &&
+              // size-ratio prune (j ≥ t ⇒ min|set| ≥ t·max|set|): cheap int
+              // compare eliminates pairs before the signature probe
+              least(col("sz_a"), col("sz_b")).cast("double") >=
+                lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double") &&
+              arrays_overlap(col("sig_a"), col("sig_b")))
+            .select("id_a", "id_b")
+        } else {
+          val reps = groups.select(col("g").as("id"), array_join(col("words"), " ").as("text"))
+          minhashCandidates(reps, "id", "text", bands, r)
+        }
+      verifyPairs(candidates, groups, threshold,
+        side = if (broadcastable) broadcast else identity, sizePrune = true)
+    }
 
   /** Near-duplicate pairs: LSH candidates filtered by exact word-set jaccard
     * ≥ threshold. Output is verifiable against an all-pairs oracle because
@@ -282,25 +341,9 @@ object Dedup {
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, bands: Int = 20, r: Int = 2, shingleN: Int = 1,
-                   broadcastThreshold: Long = 256L): DataFrame = {
-    val g = setGraph(docs, idCol, textCol, threshold, bands, r, shingleN, broadcastThreshold)
-
-    // cross-group pairs: rep pairs × member ids via two equi-joins on the
-    // slim (id, g) frame
-    val cross = g.repPairs
-      .join(g.keyed.select(col("g").as("id_a"), col("id").as("ia")), "id_a")
-      .join(g.keyed.select(col("g").as("id_b"), col("id").as("ib")), "id_b")
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-
-    // identical-set doc pairs: jaccard exactly 1.0 (self equi-join on the
-    // set identity — singleton groups drop out naturally)
-    val intra = g.keyed.as("a")
-      .join(g.keyed.as("b"), col("a.g") === col("b.g") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), lit(1.0).as("jaccard"))
-
-    if (threshold <= 1.0) cross.unionByName(intra) else cross
-  }
+                   broadcastThreshold: Long = 256L): DataFrame =
+    docPairs(setGraph(docs, idCol, textCol, threshold, bands, r, shingleN, broadcastThreshold),
+      identical = threshold <= 1.0)
 
   /** Cross-source duplication MATRIX — the corpus-level decontamination
     * diagnostic: per (unordered) source pair, how many verified near-dup
@@ -626,7 +669,7 @@ object Dedup {
     * ([[incrementalSurvivors]]) — a production corpus is never re-minhashed
     * per ingest.
     *
-    * Build shape mirrors [[setGraph]]: the full-corpus pass produces only
+    * Build shape mirrors [[canonicalSets]]: the full-corpus pass produces only
     * slim (id, set_key) rows; word arrays and signatures are derived from
     * one representative document per distinct set, so canonical duplicates
     * never carry arrays through the shuffle.
@@ -634,9 +677,7 @@ object Dedup {
   def buildNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                         bands: Int = 20, r: Int = 2, shingleN: Int = 1): DataFrame = {
     val units = setUnits(shingleN)
-    val keyed = corpus.select(
-      col(idCol).as("__gmin"),
-      md5(array_join(sort_array(units(col(textCol))), " ")).as("set_key"))
+    val keyed = corpus.select(col(idCol).as("__gmin"), setKey(col(textCol), shingleN).as("set_key"))
     val skeleton = keyed.groupBy("set_key").agg(min(col("__gmin")).as("__gmin"))
     skeleton
       .join(corpus.select(col(idCol).as("__gmin"), col(textCol).as("__text")), "__gmin")
@@ -737,9 +778,7 @@ object Dedup {
                      nestedLoopWorkBudget: Long = 1L << 30): DataFrame = {
     val units = setUnits(shingleN)
     // one batch pass → slim (id, set_key); canonical batch duplicates probe once
-    val keyed = batch.select(
-      col(idCol).as("__bid"),
-      md5(array_join(sort_array(units(col(textCol))), " ")).as("__bkey"))
+    val keyed = batch.select(col(idCol).as("__bid"), setKey(col(textCol), shingleN).as("__bkey"))
       .persist()
     Caches.register(keyed)
     val bReps = keyed.groupBy("__bkey").agg(min(col("__bid")).as("__bid"))
@@ -1230,28 +1269,11 @@ object Dedup {
     * a correctness bug that only fires on specific set sizes.
     */
   def prefixFilterPairs(docs: DataFrame, idCol: String, textCol: String,
-                        tNum: Int, tDen: Int, shingleN: Int = 1): DataFrame = {
-    val sub = prefixSub(docs, idCol, textCol, tNum, tDen, shingleN)
-    // expand rep pairs to doc pairs; identical-set pairs are jaccard 1.0
-    val cross = sub.repPairs
-      .join(sub.keyed.select(col("g").as("id_a"), col("id").as("ia")), "id_a")
-      .join(sub.keyed.select(col("g").as("id_b"), col("id").as("ib")), "id_b")
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-    val intra = sub.keyed.as("a")
-      .join(sub.keyed.as("b"), col("a.g") === col("b.g") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(intra)
-  }
+                        tNum: Int, tDen: Int, shingleN: Int = 1): DataFrame =
+    docPairs(prefixSub(docs, idCol, textCol, tNum, tDen, shingleN))
 
-  /** The prefix-filter join's SET-GRAIN substrate at the GROUP-MIN grain:
-    *  - `keyed`    (id, g)               — one row per document; g = the
-    *                                       set's minimum doc id (docs whose
-    *                                       set key is null never pair and
-    *                                       carry no row)
-    *  - `skel`     (g, n)                — one row per distinct word set
-    *  - `repPairs` (id_a, id_b, jaccard) — exact verified pairs of DISTINCT
-    *                                       sets, id_a < id_b, at the g grain
+  /** The prefix-filter join's [[SetGraph]] (from [[canonicalSets]]): its
+    * `repPairs` are the exact jaccard ≥ tNum/tDen pairs of DISTINCT sets.
     *
     * r12 optimization (guide §2.3 "narrower types"): every pairwise stage —
     * the prefix-token self-join, the candidate `distinct`, the verify
@@ -1263,11 +1285,8 @@ object Dedup {
     * consumer relabeled to anyway (the r9 q_keep_sweep lesson, now applied
     * at the source). The md5 content key still exists — one groupBy derives
     * g from it — but it never rides a pairwise shuffle again.
-    */
-  private[graft] final case class PrefixSub(keyed: DataFrame, skel: DataFrame,
-                                            repPairs: DataFrame)
-
-  /** @param bruteThreshold max DISTINCT sets for the broadcast all-pairs
+    *
+    * @param bruteThreshold max DISTINCT sets for the broadcast all-pairs
     *                        verify route; above it the prefix-filter join
     *                        runs. Both routes are exact — all-pairs is
     *                        trivially complete, the prefix join complete by
@@ -1283,132 +1302,77 @@ object Dedup {
     *                        quadratic anyway); the scan's n²/2 size-pruned
     *                        condition evaluations grow quadratically, so
     *                        the ×10 corpus (~39k sets) correctly routes to
-    *                        the prefix join. The setGraph/probeSurvivors
-    *                        planner-split precedent, applied to the exact
-    *                        family.
+    *                        the prefix join. The same planner split as the
+    *                        minhash substrate's `broadcastThreshold`
+    *                        ([[setGraph]]) and [[probeSurvivors]], applied
+    *                        to the exact family.
     */
   private[graft] def prefixSub(docs: DataFrame, idCol: String, textCol: String,
                                tNum: Int, tDen: Int,
                                shingleN: Int = 1,
-                               bruteThreshold: Long = 4096L): PrefixSub = {
+                               bruteThreshold: Long = 4096L): SetGraph = {
     require(tNum > 0 && tDen >= tNum, s"threshold $tNum/$tDen outside (0,1]")
     val threshold = tNum.toDouble / tDen
-    val units = setUnits(shingleN)
-    // layout-capped scans rebalance up to the session parallelism (r13):
-    // the tokenize+md5 pass below otherwise runs on however few tasks the
-    // file layout yields (1 on single-row-group test files) — identity at
-    // real scan widths (GraftSession.rebalanceScan)
-    val docsW = graft.GraftSession.rebalanceScan(docs)
-    // canonicalization — identical word sets collapse before any pairwise
-    // work; the corpus tokenizes + hashes exactly once, into this slim
-    // persisted frame (read by the skeleton agg AND the id→g attach)
-    val keyedMd5 = docsW.select(
-      col(idCol).as("id"),
-      md5(array_join(sort_array(units(col(textCol))), " ")).as("set_key"))
-      .persist()
-    Caches.register(keyedMd5)
-    val skelMd5 = keyedMd5.groupBy("set_key")
-      .agg(min(col("id")).as("g"), count(lit(1)).as("n"))
-      .persist() // read by keyed attach, groups build, and skel consumers
-    Caches.register(skelMd5)
-    val keyed = keyedMd5.join(skelMd5.select("set_key", "g"), "set_key")
-      .select(col("id"), col("g"))
-      .persist()
-    Caches.register(keyed)
-    val skel = skelMd5.select("g", "n")
-    // rep words: tokenization re-runs only for the one representative doc
-    // of each distinct set — keyed by the LONG g from here on.
-    // The repartition(g) is load-bearing (guide §2.4 "share one exchange"):
-    // the cached frame's HashPartitioning(g) propagates through the whole
-    // pairwise chain — ordered's collect_list agg, the candidate distinct
-    // (id_a = the streamed side's g, and a hash partitioning on a SUBSET
-    // of the grouping keys satisfies ClusteredDistribution), and the
-    // verify/expansion joins on id_a — so NONE of them re-shuffle. Without
-    // it the join above can broadcast the skeleton side, the cached frame
-    // inherits the docs scan's unknown partitioning, and every downstream
-    // stage pays its own exchange of a multi-million-row pair stream
-    // (measured: the 4/5 warm chain 3.2 s with the partitioning vs 8.7 s
-    // without; one slim rep-words shuffle buys exchange-free descendants).
-    val groups = skelMd5.select(col("g"))
-      .join(docs.select(col(idCol).as("g"), col(textCol).as("__text")), "g")
-      .select(col("g"), sort_array(units(col("__text"))).as("words"))
-      .repartition(col("g"))
-      .persist()
-    Caches.register(groups)
-
-    // route choice on the distinct-set count (one control-plane scalar;
-    // also materializes the persisted skeleton) — see bruteThreshold above
-    val nSets = skelMd5.count()
-    val repPairs = if (nSets <= bruteThreshold) {
-      // broadcast all-pairs verify: trivially complete, n²/2 size-pruned
-      // condition evaluations; the probe side repartitions so the scan
-      // parallelizes off the few-partition cached frame
-      val a = groups.select(col("g").as("ga"), col("words").as("wa"),
-          size(col("words")).as("sa"))
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      val b = groups.select(col("g").as("gb"), col("words").as("wb"),
-        size(col("words")).as("sb"))
-      a.join(broadcast(b),
+    canonicalSets(docs, idCol, textCol, shingleN) { (skel, groups) =>
+      // route choice on the distinct-set count (one control-plane scalar;
+      // also materializes the persisted skeleton) — see bruteThreshold above
+      val nSets = skel.count()
+      if (nSets <= bruteThreshold) {
+        // broadcast all-pairs verify: trivially complete, n²/2 size-pruned
+        // condition evaluations; the probe side repartitions so the scan
+        // parallelizes off the few-partition cached frame
+        val a = groups.select(col("g").as("ga"), col("words").as("wa"),
+            size(col("words")).as("sa"))
+          .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        val b = groups.select(col("g").as("gb"), col("words").as("wb"),
+          size(col("words")).as("sb"))
+        val pairs = a.join(broadcast(b),
           col("ga") < col("gb") &&
             lit(tDen.toLong) * least(col("sa"), col("sb")) >=
               lit(tNum.toLong) * greatest(col("sa"), col("sb")))
-        .withColumn("__i", NativeHash.sortedIntersectGe(col("wa"), col("wb"), threshold))
-        .filter(col("__i") >= 0)
-        .withColumn("jaccard",
-          col("__i").cast("double") /
-            (col("sa") + col("sb") - col("__i")).cast("double"))
-        .select(col("ga").as("id_a"), col("gb").as("id_b"), col("jaccard"))
-    } else {
-      // global rarest-first order: df over DISTINCT sets (any global total
-      // order is correct; df-ascending keeps the indexed prefixes cold)
-      val tokDf = groups.select(explode(col("words")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("df"))
-      val ordered = groups.select(col("g"), explode(col("words")).as("w"))
-        .join(tokDf, "w")
-        .groupBy("g")
-        .agg(sort_array(collect_list(struct(col("df"), col("w")))).as("ow"))
-        .select(col("g"),
-          transform(col("ow"), s => s.getField("w")).as("ow"))
-      // prefix length |x| − ⌈t·|x|⌉ + 1; ⌈n·sz/d⌉ = (n·sz + d − 1) DIV d
-      val pref = ordered
-        .withColumn("sz", size(col("ow")))
-        .withColumn("p",
-          (col("sz") - expr(s"(sz * $tNum + ${tDen - 1}) DIV $tDen") + 1).cast("int"))
-        .select(col("g"), col("sz"),
-          posexplode(slice(col("ow"), lit(1), col("p")))
-            .as(Seq("pos", "w")))
-      // inverted-index equi-join on the prefix token; two exact-integer
-      // prunes ride the join condition: the size-ratio (min ≥ t·max ⇔
-      // d·min ≥ n·max) and PPJoin's POSITIONAL filter — a jaccard-≥t pair
-      // needs overlap α = ⌈n(sa+sb)/(n+d)⌉, and for the FIRST common token
-      // (0-based positions pa, pb) the overlap is ≤ 1 + min(sa−1−pa,
-      // sb−1−pb); every true pair's first-common-token row passes (earlier
-      // common tokens would contradict "first"), so completeness holds
-      // while same-token collisions deep in dissimilar prefixes drop before
-      // the distinct (measured 14.8M → much smaller raw stream on the
-      // 31-word dense corpus)
-      val alphaDen = (tNum + tDen).toLong
-      val cand = pref.as("a").join(pref.as("b"),
-          col("a.w") === col("b.w") &&
-          col("a.g") < col("b.g") &&
-          lit(tDen.toLong) * least(col("a.sz"), col("b.sz")) >=
-            lit(tNum.toLong) * greatest(col("a.sz"), col("b.sz")) &&
-          (lit(1L) + least(col("a.sz") - 1 - col("a.pos"), col("b.sz") - 1 - col("b.pos"))) *
-            lit(alphaDen) >= lit(tNum.toLong) * (col("a.sz") + col("b.sz")))
-        .select(col("a.g").as("id_a"), col("b.g").as("id_b"))
-        .distinct()
-      // exact verify — identical single-scan merge contract as the minhash
-      // route (bail at −1 below threshold, else the exact |A∩B|)
-      cand
-        .join(groups.select(col("g").as("id_a"), col("words").as("words_a")), "id_a")
-        .join(groups.select(col("g").as("id_b"), col("words").as("words_b")), "id_b")
-        .withColumn("__i", NativeHash.sortedIntersectGe(col("words_a"), col("words_b"), threshold))
-        .filter(col("__i") >= 0)
-        .withColumn("jaccard",
-          col("__i").cast("double") /
-            (size(col("words_a")) + size(col("words_b")) - col("__i")).cast("double"))
-        .select("id_a", "id_b", "jaccard")
+        withJaccard(pairs, "wa", "wb", threshold)
+          .select(col("ga").as("id_a"), col("gb").as("id_b"), col("jaccard"))
+      } else {
+        // global rarest-first order: df over DISTINCT sets (any global total
+        // order is correct; df-ascending keeps the indexed prefixes cold)
+        val tokDf = groups.select(explode(col("words")).as("w"))
+          .groupBy("w").agg(count(lit(1)).as("df"))
+        val ordered = groups.select(col("g"), explode(col("words")).as("w"))
+          .join(tokDf, "w")
+          .groupBy("g")
+          .agg(sort_array(collect_list(struct(col("df"), col("w")))).as("ow"))
+          .select(col("g"),
+            transform(col("ow"), s => s.getField("w")).as("ow"))
+        // prefix length |x| − ⌈t·|x|⌉ + 1; ⌈n·sz/d⌉ = (n·sz + d − 1) DIV d
+        val pref = ordered
+          .withColumn("sz", size(col("ow")))
+          .withColumn("p",
+            (col("sz") - expr(s"(sz * $tNum + ${tDen - 1}) DIV $tDen") + 1).cast("int"))
+          .select(col("g"), col("sz"),
+            posexplode(slice(col("ow"), lit(1), col("p")))
+              .as(Seq("pos", "w")))
+        // inverted-index equi-join on the prefix token; two exact-integer
+        // prunes ride the join condition: the size-ratio (min ≥ t·max ⇔
+        // d·min ≥ n·max) and PPJoin's POSITIONAL filter — a jaccard-≥t pair
+        // needs overlap α = ⌈n(sa+sb)/(n+d)⌉, and for the FIRST common token
+        // (0-based positions pa, pb) the overlap is ≤ 1 + min(sa−1−pa,
+        // sb−1−pb); every true pair's first-common-token row passes (earlier
+        // common tokens would contradict "first"), so completeness holds
+        // while same-token collisions deep in dissimilar prefixes drop before
+        // the distinct (measured 14.8M → much smaller raw stream on the
+        // 31-word dense corpus)
+        val alphaDen = (tNum + tDen).toLong
+        val cand = pref.as("a").join(pref.as("b"),
+            col("a.w") === col("b.w") &&
+            col("a.g") < col("b.g") &&
+            lit(tDen.toLong) * least(col("a.sz"), col("b.sz")) >=
+              lit(tNum.toLong) * greatest(col("a.sz"), col("b.sz")) &&
+            (lit(1L) + least(col("a.sz") - 1 - col("a.pos"), col("b.sz") - 1 - col("b.pos"))) *
+              lit(alphaDen) >= lit(tNum.toLong) * (col("a.sz") + col("b.sz")))
+          .select(col("a.g").as("id_a"), col("b.g").as("id_b"))
+          .distinct()
+        verifyPairs(cand, groups, threshold)
+      }
     }
-    PrefixSub(keyed, skel, repPairs)
   }
 }

@@ -45,7 +45,7 @@ object StreamDedup {
   def firstSeen(docs: DataFrame, idCol: String, textCol: String,
                 canonical: Boolean = false, stateTtl: Option[String] = None): DataFrame = {
     val fp =
-      if (canonical) md5(array_join(sort_array(TextFunctions.wordSet(col(textCol))), " "))
+      if (canonical) graft.operators.Dedup.setKey(col(textCol), shingleN = 1)
       else TextFunctions.contentFingerprint(col(textCol))
     firstSeenByKey(docs, idCol, fp, stateTtl)
   }
@@ -103,49 +103,49 @@ object StreamDedup {
     a.asInstanceOf[Comparable[Any]].compareTo(b)
 }
 
-/** Streaming NEAR-dup admission gate — the `foreachBatch` production
-  * pattern: every micro-batch is probed against the corpus near-dup index
-  * with the SAME operator a bulk ingest uses
-  * ([[graft.operators.Dedup.probeSurvivors]] — batch side broadcasts, the
-  * index never shuffles), and admitted survivors' index rows append so
-  * later batches dedup against earlier admissions too. One code path
-  * serves bulk ingest and the stream; only the batching differs.
+/** The body every index-probing admission gate shares ([[NearDupGate]],
+  * [[ContainmentGate]]): each micro-batch is probed against the gate's
+  * index with the SAME operator a bulk ingest uses (`probe`), and admitted
+  * survivors' index rows (`indexRows`) append so later batches test against
+  * earlier admissions too. One code path serves bulk ingest and the stream;
+  * only the batching differs.
   *
   * The growing index lives as an eager `localCheckpoint` (constant-depth
-  * lineage across an unbounded run). With `persistDir` set, every
-  * admission's index rows ALSO append to parquet (the
-  * [[graft.operators.Dedup.buildNearDupIndex]] schema — the same artifact
-  * a bulk corpus build stores), and a new gate constructed over the same
-  * directory recovers them: restart == continuous, spec-asserted. Without
-  * it the admitted-survivor index is session-only and a restart forgets
-  * admissions.
+  * lineage across an unbounded run). With `persistDir` (any Hadoop path) set,
+  * every admission's index rows ALSO append to parquet in the index's own
+  * schema, and a new gate constructed over the same directory recovers
+  * them: restart == continuous, spec-asserted. Without it the admitted
+  * index is session-only and a restart forgets admissions.
   */
-final class NearDupGate(initialIndex: DataFrame, idCol: String, textCol: String,
-                        threshold: Double, bands: Int = 20, r: Int = 2, shingleN: Int = 1,
-                        persistDir: Option[String] = None) {
-  import graft.operators.{Caches, Dedup}
+abstract class AdmissionGate private[streaming] (initialIndex: DataFrame,
+                                                 persistDir: Option[String]) {
+  import graft.operators.Caches
+
+  /** The surviving rows of `batch` against `index`. */
+  protected def probe(index: DataFrame, batch: DataFrame): DataFrame
+  /** The index rows of admitted `survivors`. */
+  protected def indexRows(survivors: DataFrame): DataFrame
 
   @volatile private var index: DataFrame = persistDir match {
-    case Some(dir) if NearDupGate.hasData(dir) =>
+    case Some(dir) if AdmissionGate.hasData(initialIndex.sparkSession, dir) =>
       // recovery: prior admissions re-enter the probe index before the
       // first batch — identical schema, so the probe plan is unchanged
       initialIndex.unionByName(graft.GraftSession.parquet(initialIndex.sparkSession, dir))
         .localCheckpoint(true)
     case _ => initialIndex
   }
-  /** The current corpus index (initial ∪ admitted survivors). */
+  /** The current index (initial ∪ admitted survivors). */
   def currentIndex: DataFrame = index
 
   /** Probe one batch; returns its survivors and grows the index with them.
-    * Within-batch near-dups are NOT collapsed (same contract as
-    * [[graft.operators.Dedup.probeSurvivors]] — compose with
-    * `dropDuplicatesNear` upstream when batches can self-collide).
+    * Within-batch duplicates are NOT collapsed (the bulk probe's contract —
+    * compose with the batch materializer upstream when batches can
+    * self-collide).
     */
   def admit(batch: DataFrame): DataFrame = synchronized {
-    val survivors = Dedup.probeSurvivors(index, batch, idCol, textCol,
-      threshold, bands, r, shingleN).persist()
+    val survivors = probe(index, batch).persist()
     Caches.register(survivors)
-    val newRows = Dedup.buildNearDupIndex(survivors, idCol, textCol, bands, r, shingleN)
+    val newRows = indexRows(survivors)
       .localCheckpoint(true) // computed once: the append write AND the union both read it
     persistDir.foreach(dir => newRows.write.mode("append").parquet(dir))
     index = index.unionByName(newRows).localCheckpoint(true)
@@ -162,16 +162,36 @@ final class NearDupGate(initialIndex: DataFrame, idCol: String, textCol: String,
   }
 }
 
-object NearDupGate {
+object AdmissionGate {
   /** True when `dir` already holds persisted admission rows (a parquet
-    * append from a previous run — detected by data files, not just the
-    * directory, which the first append also creates).
+    * append from a previous run — detected by non-empty data files, not
+    * just the directory, which the first append also creates). Listed
+    * through the path's Hadoop `FileSystem`, so `file:`, `hdfs:` or `s3a:`
+    * URIs recover like bare local paths.
     */
-  private def hasData(dir: String): Boolean = {
-    val d = new java.io.File(dir)
-    d.isDirectory && d.listFiles() != null &&
-      d.listFiles().exists(f => f.getName.endsWith(".parquet") && f.length() > 0)
+  private def hasData(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) &&
+      fs.listStatus(p).exists(f => f.getPath.getName.endsWith(".parquet") && f.getLen > 0)
   }
+}
+
+/** Streaming NEAR-dup admission gate: an [[AdmissionGate]] whose probe is
+  * [[graft.operators.Dedup.probeSurvivors]] (batch side broadcasts, the
+  * index never shuffles) over a [[graft.operators.Dedup.buildNearDupIndex]]
+  * index — the same artifact a bulk corpus build stores.
+  */
+final class NearDupGate(initialIndex: DataFrame, idCol: String, textCol: String,
+                        threshold: Double, bands: Int = 20, r: Int = 2, shingleN: Int = 1,
+                        persistDir: Option[String] = None)
+    extends AdmissionGate(initialIndex, persistDir) {
+  import graft.operators.Dedup
+
+  protected def probe(index: DataFrame, batch: DataFrame): DataFrame =
+    Dedup.probeSurvivors(index, batch, idCol, textCol, threshold, bands, r, shingleN)
+  protected def indexRows(survivors: DataFrame): DataFrame =
+    Dedup.buildNearDupIndex(survivors, idCol, textCol, bands, r, shingleN)
 }
 
 /** Streaming EXACT-dedup admission gate with a Bloom prefilter — the

@@ -64,6 +64,14 @@ class ContainmentGateSpec extends SparkSpec {
   }
 
   test("recovery: a restarted gate over the persisted index equals a continuous run") {
+    restart(java.nio.file.Files.createTempDirectory("cgate_persist").toString + "/index")
+  }
+
+  test("recovery over a file: URI reads the persisted admissions back") {
+    restart("file:" + java.nio.file.Files.createTempDirectory("cgate_uri").toString + "/index")
+  }
+
+  private def restart(dir: String): Unit = {
     val corpus = Seq(d(1L, w)).toDF("doc_id", "text")
     val batch1 = Seq(d(11L, x)).toDF("doc_id", "text")   // fresh -> admitted
     val batch2 = Seq(
@@ -79,7 +87,6 @@ class ContainmentGateSpec extends SparkSpec {
     val c1 = ids(continuous.admit(batch1))
     val c2 = ids(continuous.admit(batch2))
 
-    val dir = java.nio.file.Files.createTempDirectory("cgate_persist").toString + "/index"
     val gateA = new ContainmentGate(initial, "doc_id", "text",
       threshold = 0.8, shingleN = 1, persistDir = Some(dir))
     val r1 = ids(gateA.admit(batch1))

@@ -59,7 +59,7 @@ class DictSpec extends SparkSpec {
     assert(!encNoHint.queryExecution.optimizedPlan.toString.contains("broadcast"),
       s"broadcastDict=false still hints broadcast:\n${encNoHint.queryExecution.optimizedPlan}")
     assert(encNoHint.filter(col("code").isNull).count() == 0)
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.Caches.release()
   }
 
   test("dictionary on the real vocabulary is a pure function of counts") {

@@ -125,6 +125,6 @@ class LayoutSpec extends SparkSpec {
       tieCols = Seq("l_orderkey", "l_linenumber"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"unexpected window in audit plan:\n$plan")
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.Caches.release()
   }
 }

@@ -98,4 +98,78 @@ class SetSimJoinSpec extends SparkSpec {
     assert(viaPrefix == viaMinhash)
     assert(viaPrefix.nonEmpty)
   }
+
+  /** Shingle fixture (n = 3): per group, a 12-word base, an identical copy
+    * (jaccard 1.0), a last-word variant (9/11 ≈ 0.82, passes 4/5), a
+    * swapped-middle variant (same word SET, shingle jaccard 6/14 — fails)
+    * and a mid-word variant (7/13 — fails). Groups share no words.
+    */
+  private val shingleRows: Seq[(Long, String)] = (0 until 30).flatMap { g =>
+    val base = (0 until 12).map(j => s"s${g * 20 + j}")
+    val swapped = base.updated(5, base(6)).updated(6, base(5))
+    Seq(base, base, base.updated(11, s"z$g"), swapped, base.updated(6, s"m$g"))
+      .zipWithIndex.map { case (ws, k) => ((g * 5 + k).toLong, ws.mkString(" ")) }
+  }
+
+  /** Driver all-pairs reference over word 3-gram shingle sets. */
+  private def shingleRef(rows: Seq[(Long, String)], t: Double): Seq[(Long, Long, Double)] = {
+    def sh(s: String) = s.trim.toLowerCase.split("\\s+").sliding(3).map(_.mkString(" ")).toSet
+    rows.combinations(2).flatMap { case Seq((ia, ta), (ib, tb)) =>
+      val (a, b) = (sh(ta), sh(tb))
+      val i = a.intersect(b).size
+      val j = i.toDouble / (a.size + b.size - i).toDouble
+      if (j >= t) Some((math.min(ia, ib), math.max(ia, ib), j)) else None
+    }.toSeq.sorted
+  }
+
+  test("shingle sets (n = 3): both prefix routes equal the minhash route and all-pairs shingle jaccard") {
+    import spark.implicits._
+    val docs = shingleRows.toDF("id", "text")
+    def rows(df: DataFrame) = df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)]
+      .collect().toSeq.sorted
+    val ref = shingleRef(shingleRows, 0.8)
+    // 30 copies, 60 last-word pairs (base and copy each pair with the variant)
+    assert(ref.size == 90 && ref.count(_._3 == 1.0) == 30)
+    val viaBrute = rows(Dedup.prefixFilterPairs(docs, "id", "text", 4, 5, shingleN = 3))
+    Caches.release()
+    val forced = Dedup.prefixSub(docs, "id", "text", 4, 5, shingleN = 3, bruteThreshold = 0L)
+    val viaPrefix = rows(Dedup.docPairs(forced))
+    Caches.release()
+    val viaMinhash = rows(Dedup.nearDupPairs(docs, "id", "text", 0.8, shingleN = 3))
+    Caches.release()
+    assert(viaBrute == ref)
+    assert(viaPrefix == ref)
+    assert(viaMinhash == ref)
+  }
+
+  test("job counts: building and collecting the near-dup pair frames starts the pinned jobs") {
+    // each substrate runs one route-choice count while it is built; the
+    // rest starts when the pair frame is collected. Pinned so a shared
+    // building block cannot add a job to either family.
+    val docs = corpus(60).unionByName(
+      corpus(60).filter(col("id") < 10).withColumn("id", col("id") + 1000))
+    def jobs(build: => DataFrame): (Int, Int, Long) = {
+      Caches.release()
+      val (df, built) = jobsStartedBy(build)
+      val (n, collected) = jobsStartedBy(df.collect().length.toLong)
+      Caches.release()
+      (built, collected, n)
+    }
+    val got = Seq(
+      "nearDupPairs" -> jobs(Dedup.nearDupPairs(docs, "id", "text", 0.8)),
+      "nearDupPairs banded" ->
+        jobs(Dedup.nearDupPairs(docs, "id", "text", 0.8, broadcastThreshold = 0L)),
+      "prefixFilterPairs" -> jobs(Dedup.prefixFilterPairs(docs, "id", "text", 4, 5)),
+      "prefixFilterPairs prefix join" -> jobs {
+        Dedup.docPairs(Dedup.prefixSub(docs, "id", "text", 4, 5, bruteThreshold = 0L))
+      })
+    info(got.mkString(", "))
+    // (jobs to build, jobs to collect, pairs): 60 variant pairs, 10 copies
+    // and 10 copy × variant pairs
+    assert(got.toMap == Map(
+      "nearDupPairs" -> (8, 13, 80L),
+      "nearDupPairs banded" -> (8, 14, 80L),
+      "prefixFilterPairs" -> (5, 15, 80L),
+      "prefixFilterPairs prefix join" -> (5, 26, 80L)), got)
+  }
 }

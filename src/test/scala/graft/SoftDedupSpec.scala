@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Caches, Dedup}
 import org.apache.spark.sql.functions._
 
 /** clusterAssign + its consumers (q_soft_dedup / q_split_leakage) and the
@@ -44,7 +44,7 @@ class SoftDedupSpec extends SparkSpec {
     val ref = refClusters(rows, 0.8)
     val sizes = ref.values.groupBy(identity).map { case (c, xs) => c -> xs.size.toLong }
     assert(got == rows.map { case (id, _) => (id, ref(id), sizes(ref(id))) }.toSet)
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("clusterAssign matches the driver model on the real sf0.001 corpus") {
@@ -56,7 +56,7 @@ class SoftDedupSpec extends SparkSpec {
     val got = Dedup.clusterAssign(d, "doc_id", "text", 4, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == rows.map { case (id, _) => (id, ref(id), sizes(ref(id))) }.toSet)
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("q_soft_dedup: cluster mass sums to one doc-equivalent per cluster (ppm floor)") {
@@ -76,7 +76,7 @@ class SoftDedupSpec extends SparkSpec {
       val mass = xs.map(_.getLong(3)).sum
       assert(mass <= 1000000L && mass > 1000000L - sz)
     }
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("q_split_leakage: cluster policy leaks ZERO pairs; split sizes partition the corpus") {
@@ -88,7 +88,7 @@ class SoftDedupSpec extends SparkSpec {
     val (dtr, dva, dte, _) = out("doc_hash")
     assert(ccross == 0L, "cluster-hash split must never strand a near-dup pair")
     assert(ctr + cva + cte == total && dtr + dva + dte == total)
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("doc-hash policy CAN strand a planted near-dup pair (the leak the cluster policy closes)") {
@@ -103,7 +103,7 @@ class SoftDedupSpec extends SparkSpec {
     val cl = Dedup.clusterAssign(d, "doc_id", "text", 4, 5)
     // identical docs: one cluster, size 2 — under doc-hash they'd split
     assert(cl.select("cluster_id").distinct().count() == 1)
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("q_effective_tokens: retention in (0,1], weighted mass bounded by raw, singleton identity") {
@@ -124,7 +124,7 @@ class SoftDedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
     val cl = Dedup.clusterAssign(singletons, "doc_id", "text", 4, 5)
     assert(cl.filter(col("cluster_size") =!= 1L).count() == 0)
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("q_dedup_keep_best: winner beats or ties every clustermate; one winner per cluster") {
@@ -146,7 +146,7 @@ class SoftDedupSpec extends SparkSpec {
           s"member $m (q=${quality(m)}) beats winner $id (q=$q) in cluster $cid")
       }
     }
-    Dedup.releaseCaches()
+    Caches.release()
   }
 
   test("q_pad_waste: caps are the tightest enclosing power of two; waste accounting closes") {

@@ -125,6 +125,14 @@ class StreamDedupSpec extends SparkSpec {
   }
 
   test("near-dup gate recovery: a restarted gate over the persisted index equals a continuous run") {
+    nearDupRestart(java.nio.file.Files.createTempDirectory("gate_persist").toString + "/index")
+  }
+
+  test("near-dup gate recovery over a file: URI reads the persisted admissions back") {
+    nearDupRestart("file:" + java.nio.file.Files.createTempDirectory("gate_uri").toString + "/index")
+  }
+
+  private def nearDupRestart(dir: String): Unit = {
     import spark.implicits._
     def d(id: Long, words: Seq[String]) = (id, words.mkString(" "))
     val w = (0 until 10).map(i => s"rw$i")
@@ -146,7 +154,6 @@ class StreamDedupSpec extends SparkSpec {
     val c2 = ids(continuous.admit(batch2))
 
     // restarted run: gate 1 persists its admissions, dies; gate 2 recovers
-    val dir = java.nio.file.Files.createTempDirectory("gate_persist").toString + "/index"
     val gateA = new NearDupGate(initial, "doc_id", "text", threshold = 0.8,
       persistDir = Some(dir))
     val r1 = ids(gateA.admit(batch1))

@@ -148,11 +148,11 @@ class VectorLshSpec extends SparkSpec {
   }
 
   test("scale-probe corpus: production 8x16 config recovers planted pairs, background prunes to zero") {
-    // the EmbedScaleProbe corpus at CI size — pins the corpus shape the
-    // sf1 scale evidence stands on: planted near-dups (cos ≈ 0.98) are
-    // found at ≥ 0.95 recall, and NOTHING else clears the 0.8 threshold
-    // (background cosines concentrate near 0 at dim 64)
-    val vecs = graft.EmbedScaleProbe.corpus(spark, 2000)
+    // the embedding scale-probe corpus at CI size (PLANS.md) — pins the
+    // corpus shape the sf1 scale evidence stands on: planted near-dups
+    // (cos ≈ 0.98) are found at ≥ 0.95 recall, and NOTHING else clears the
+    // 0.8 threshold (background cosines concentrate near 0 at dim 64)
+    val vecs = scaleProbeCorpus(2000)
     val pairs = graft.operators.Dedup.embedNearDupPairsLsh(
         vecs, "vec_id", "embedding", threshold = 0.8,
         nTables = 8, planesPerTable = 16)
@@ -164,5 +164,27 @@ class VectorLshSpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => b >= 2000 && a == (b - 2000) * 100 },
       s"background pair leaked past the verify: $pairs")
     graft.operators.Caches.release()
+  }
+
+  /** The embedding scale-probe corpus: `n` md5-derived pseudo-random
+    * dim-64 background vectors (pairwise cosines concentrate near 0, nothing
+    * clears 0.8) plus n/100 planted near-dups (v + 0.2·u, cosine ≈ 0.98) of
+    * ids ≡ 0 (mod 100), appended with ids ≥ n. A pure function of n — no RNG.
+    */
+  private def scaleProbeCorpus(n: Long): org.apache.spark.sql.DataFrame = {
+    val dim = 64
+    def hvec(keyPrefix: String, idCol: String): org.apache.spark.sql.Column =
+      transform(sequence(lit(0), lit(dim - 1)), j =>
+        (graft.plans.NativeHash.md5Mod(
+          concat(lit(keyPrefix), col(idCol).cast("string"), lit(":"), j.cast("string")),
+          1000L).cast("double") / 1000.0 - 0.5).cast("float"))
+    val bg = spark.range(n).select(col("id").as("vec_id"), hvec("v:", "id").as("embedding"))
+    val planted = spark.range(n / 100).select(
+        (col("id") + n).as("vec_id"),
+        (col("id") * 100).as("__src"))
+      .select(col("vec_id"),
+        zip_with(hvec("v:", "__src"), hvec("p:", "vec_id"),
+          (a, b) => (a + b * lit(0.2f)).cast("float")).as("embedding"))
+    bg.unionByName(planted)
   }
 }
