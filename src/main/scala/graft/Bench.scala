@@ -18,8 +18,8 @@ object Bench {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // shuffle width tracks the input size (SPARK_GRAFT_INIT_PARTS still
-    // overrides) — scale runs no longer depend on remembering the env var
+    // shuffle width tracks the input size, unless the session already sets
+    // spark.sql.adaptive.coalescePartitions.initialPartitionNum
     val width = GraftSession.autoSizeShuffle(spark, sfDir)
     System.err.println(s"[bench] initial shuffle width: $width")
     GraftSession.table(spark, sfDir, "lineitem").limit(100).count()

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
-import scala.util.chaining._
 
 /** Session + table helpers shared by the library, Verify, Bench and tests.
   *
@@ -31,10 +30,9 @@ object GraftSession {
     // parallelism below a properly sized spark.sql.shuffle.partitions.
     // Deployments size shuffle.partitions to the data (AQE coalesces down
     // for free); scale runs that want wider-than-default initial shuffles
-    // opt in via SPARK_GRAFT_INIT_PARTS — the r5 sf1 audit's measured wins
-    // (banded minhash 47 s → 34 s at sf1) reproduce with 256 here.
-    .pipe(b2 => sys.env.get("SPARK_GRAFT_INIT_PARTS").fold(b2)(n =>
-      b2.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n)))
+    // set spark.sql.adaptive.coalescePartitions.initialPartitionNum
+    // themselves — the r5 sf1 audit's measured wins (banded minhash
+    // 47 s → 34 s at sf1) reproduce with 256 there.
     // InferFiltersFromGenerate rewrites explode(e) into
     // Filter(size(e) > 0) + explode(e): when e is a COMPUTED array
     // (tokenization, shingles, PQ codes — most generators in this
@@ -210,16 +208,16 @@ object GraftSession {
     * [defaultParallelism, 1024] — sf0.1 (≈18 MB) lands at the floor (32,
     * the proven setting) and the ×10 corpus (≈106 MB) lands at 256 (the
     * proven knob value). On a real cluster the same rule tracks
-    * `maxPartitionBytes`-style sizing; deployments that size
-    * `spark.sql.shuffle.partitions` themselves, or set
-    * `SPARK_GRAFT_INIT_PARTS`, are left untouched (explicit beats derived).
+    * `maxPartitionBytes`-style sizing. A session whose
+    * `initialPartitionNum` is already set (by the builder, `-Dspark.…` or
+    * `spark.conf.set`) is left untouched: explicit beats derived.
     *
-    * @return the width applied (or the override's value)
+    * @return the width applied (or the explicit setting's value)
     */
   def autoSizeShuffle(spark: SparkSession, dataDir: String): Int = {
     val conf = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    sys.env.get("SPARK_GRAFT_INIT_PARTS") match {
-      case Some(n) => n.toInt // the explicit knob wins; tune() already set it
+    spark.conf.getOption(conf) match {
+      case Some(n) => n.toInt
       case None =>
         def bytes(f: java.io.File): Long =
           if (f.isDirectory) f.listFiles() match {

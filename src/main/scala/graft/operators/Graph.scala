@@ -220,51 +220,82 @@ object Graph {
     labels
   }
 
-  /** Fixed-point PageRank: returns (node, rank) after `iters` rounds, rank
-    * in units of `scale` total initial mass, damping = `dampingMillis`/1000.
+  /** Fixed-point PageRank, the one random-walk engine: returns
+    * (node, rank) after `iters` rounds, rank in units of `scale` total
+    * initial mass, damping = `dampingMillis`/1000. Each round adds a
+    * restart term to the damped in-flow:
+    *
+    *  - `seeds` empty: the UNIFORM restart. Every node starts at
+    *    init = scale div n, and next(v) = base + (d·(in(v) + share)) div
+    *    1000 with base = ((1000−d)·init) div 1000.
+    *  - `seeds` given: PERSONALIZED PageRank, random-walk-with-restart
+    *    relevance to a seed set ("what is close to THESE nodes": expand a
+    *    trusted domain list, find accounts trading like a known cohort).
+    *    Each distinct seed starts at init = scale div |distinct seeds|,
+    *    and the restart term applies only on seed nodes:
+    *    next(v) = [v ∈ seeds]·base + (d·in(v)) div 1000. A seed listed
+    *    twice is one seed. Seeds not present in the graph contribute
+    *    nothing — callers own seed validation. The seed test is a literal
+    *    `isin` in the projection, and no node count is taken.
     *
     * Dangling nodes (in-edges but no out-edges): by default their received
     * mass LEAKS each round (the "dropped dangling mass" variant — the
     * documented published semantics of this operator's default).
-    * `redistributeDangling = true` selects the standard textbook variant
-    * instead: each round the dangling nodes' total mass is divided
-    * uniformly (floor) across all nodes inside the damping term —
-    * next(v) = base + d·(in(v) + D div n) div 1000 — so total mass is
-    * conserved up to floor residue. The dangling total is one slim
-    * anti-join + sum per round (a control-plane scalar, like the node
-    * count).
+    * `redistributeDangling = true` (uniform restart only) selects the
+    * standard textbook variant instead: each round the dangling nodes'
+    * total mass is divided uniformly (floor) across all nodes inside the
+    * damping term (`share` = D div n above), so total mass is conserved up
+    * to floor residue. The dangling total is one slim anti-join + sum per
+    * round (a control-plane scalar, like the node count).
     *
     * Lineage stays BOUNDED-depth via `localCheckpoint` every
-    * `checkpointEvery` rounds (a 50-round persist-only loop grows the
-    * logical plan linearly — optimizer time and stack depth both pay per
-    * round), but NOT every round: a checkpoint is an eager
+    * [[PageRankCheckpointEvery]] rounds (a 50-round persist-only loop grows
+    * the logical plan linearly — optimizer time and stack depth both pay
+    * per round), but NOT every round: a checkpoint is an eager
     * materialization, and checkpointing each of the registered 3 rounds
     * measured 8–9 s cold at sf0.1 vs ~0.5 s with the rounds pipelined
     * into one job (the r9 lesson: bound lineage at K, don't flatten it
     * to 1). The `redistributeDangling` variant checkpoints every round
     * regardless — its per-round driver scalar materializes the chain
     * anyway, and an unpinned tail would recompute O(iters²).
-    */
-  /** @param edgesDistinct caller asserts the edge frame is already
-    *                       duplicate-free (e.g. built by a distinct or an
-    *                       aggregation), so the operator's canonicalizing
-    *                       `distinct()` — a full edge-frame exchange — is a
-    *                       provable no-op and is skipped. Results are
-    *                       identical either way (r13, guide §2.4 "a distinct
-    *                       on data that is already unique").
+    *
+    * @param edgesDistinct caller asserts the edge frame is already
+    *                      duplicate-free (e.g. built by a distinct or an
+    *                      aggregation), so the operator's canonicalizing
+    *                      `distinct()` — a full edge-frame exchange — is a
+    *                      provable no-op and is skipped. Results are
+    *                      identical either way (r13, guide §2.4 "a distinct
+    *                      on data that is already unique").
+    * @param dropZeroRanks emit only rows with rank > 0 — decided from the
+    *                      FINAL round's base columns (`rank > 0` ⟺ the
+    *                      restart term is positive on the node, or the
+    *                      damped floor-division is ≥ 1, i.e.
+    *                      in + share ≥ ⌈1000/d⌉), so no filter on the
+    *                      COMPUTED rank column ever reaches the optimizer.
+    *                      A query-level `.filter(rank > 0)` measured ~1.7 s
+    *                      of per-run constraint re-derivation through the
+    *                      3-round plan (r12), which the r12 workaround
+    *                      (localCheckpoint before the filter) only traded
+    *                      for an eager extra materialization; the base-
+    *                      column gate costs nothing (r13). Route equality
+    *                      is spec-asserted on the real trade graph.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
+               seeds: Seq[Any] = Nil,
                dampingMillis: Int = 850,
                scale: Long = 1000000000000L,
                redistributeDangling: Boolean = false,
-               checkpointEvery: Int = 8,
-               edgesDistinct: Boolean = false): DataFrame = {
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
+               edgesDistinct: Boolean = false,
+               dropZeroRanks: Boolean = false): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingMillis >= 0 && dampingMillis <= 1000,
       s"dampingMillis must be in [0, 1000], got $dampingMillis")
     require(scale > 0 && scale <= Long.MaxValue / 1000,
       "scale must be positive and leave headroom for the damping multiply")
+    require(seeds.isEmpty || !redistributeDangling,
+      "redistributeDangling applies to the uniform restart only")
+    require(!dropZeroRanks || iters >= 1,
+      "dropZeroRanks gates the final ROUND — it needs at least one iteration")
     // e persisted (r12): deg, ew and BOTH legs of the nodes union read it —
     // unpersisted, the caller's edge derivation (often a join + distinct)
     // re-executed up to 4x per run
@@ -280,11 +311,17 @@ object Graph {
     Caches.register(ew)
     val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct().persist()
     Caches.register(nodes)
-    val n = nodes.count() // the one driver scalar (control plane)
-    if (n == 0) return nodes.withColumn("rank", lit(0L))
-    val init = scale / n
+    // onRestart: the nodes that start with mass and take the restart term
+    // (all of them, or the seeds; the optimizer folds `when(true, …)`)
+    val seedSet = seeds.distinct
+    val (n, init, onRestart) =
+      if (seedSet.isEmpty) {
+        val n = nodes.count() // the one driver scalar (control plane)
+        if (n == 0) return nodes.withColumn("rank", lit(0L))
+        (n, scale / n, lit(true))
+      } else (0L, scale / seedSet.length, col("node").isin(seedSet: _*))
     val base = ((1000L - dampingMillis) * init) / 1000L
-    var ranks = nodes.withColumn("rank", lit(init))
+    var ranks = nodes.select(col("node"), when(onRestart, lit(init)).otherwise(lit(0L)).as("rank"))
     if (redistributeDangling) ranks = ranks.localCheckpoint()
     for (i <- 0 until iters) {
       // per-node share of the dangling mass this round (0 when leaking):
@@ -297,102 +334,32 @@ object Graph {
       val contribs = ew.join(ranks, ew("src") === ranks("node"))
         .select(col("dst").as("node"), expr("rank div deg").as("c"))
         .groupBy("node").agg(sum("c").as("in"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
+      var joined = nodes.join(contribs, Seq("node"), "left")
+      if (dropZeroRanks && i == iters - 1) {
+        // rank > 0 on base columns: the restart term is base on the
+        // restart nodes (positive unless dampingMillis = 1000), and the
+        // damped term (d·(in + share)) div 1000 is ≥ 1 iff in + share ≥
+        // ⌈1000/d⌉ (in is a sum of nonnegative floor quotients)
+        val restartPass = if (base > 0) onRestart else lit(false)
+        val inPass =
+          if (dampingMillis > 0)
+            coalesce(col("in"), lit(0L)) >= (1000L + dampingMillis - 1) / dampingMillis - share
+          else lit(false)
+        joined = joined.filter(restartPass || inPass)
+      }
+      ranks = joined
         .select(col("node"),
-          (lit(base) +
+          (when(onRestart, lit(base)).otherwise(lit(0L)) +
             expr(s"($dampingMillis * (coalesce(in, 0L) + $share)) div 1000"))
             .as("rank"))
-      if (redistributeDangling || (i + 1) % checkpointEvery == 0)
+      if (redistributeDangling || (i + 1) % PageRankCheckpointEvery == 0)
         ranks = ranks.localCheckpoint()
     }
     ranks
   }
 
-  /** PERSONALIZED PageRank: random-walk-with-restart relevance to a seed
-    * set — "what is close to THESE nodes" (seeded curation: expand a
-    * trusted domain list, find accounts trading like a known cohort).
-    * Same exact-integer contract as [[pageRank]], with the uniform
-    * restart vector replaced by mass `scale div |seeds|` on each seed:
-    * next(v) = [v ∈ seeds]·((1000−d)·init) div 1000 + (d·in(v)) div 1000.
-    * Mass reaching dangling ends leaks (the [[pageRank]] default,
-    * documented there). Seeds not present in the graph contribute
-    * nothing — callers own seed validation.
-    *
-    * Scale shape identical to [[pageRank]]: one slim edge⋈rank join per
-    * round, map-side-combined contribution sums, the seed test is a
-    * literal `isin` in the projection, lineage bounded by
-    * `checkpointEvery`.
-    */
-  /** @param dropZeroRanks emit only rows with rank > 0 — decided from the
-    *                       FINAL round's base columns (`rank > 0` ⟺ the
-    *                       seed term is positive, or the damped
-    *                       contribution floor-division is ≥ 1, i.e.
-    *                       in ≥ ⌈1000/d⌉), so no filter on the COMPUTED
-    *                       rank column ever reaches the optimizer. A
-    *                       query-level `.filter(rank > 0)` measured ~1.7 s
-    *                       of per-run constraint re-derivation through the
-    *                       3-round plan (r12), which the r12 workaround
-    *                       (localCheckpoint before the filter) only traded
-    *                       for an eager extra materialization; the base-
-    *                       column gate costs nothing (r13). Route equality
-    *                       is spec-asserted on the real trade graph.
-    */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: Seq[Any], iters: Int,
-                           dampingMillis: Int = 850,
-                           scale: Long = 1000000000000L,
-                           checkpointEvery: Int = 8,
-                           edgesDistinct: Boolean = false,
-                           dropZeroRanks: Boolean = false): DataFrame = {
-    require(seeds.nonEmpty, "seeds must be non-empty")
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(dampingMillis >= 0 && dampingMillis <= 1000,
-      s"dampingMillis must be in [0, 1000], got $dampingMillis")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
-    require(!dropZeroRanks || iters >= 1,
-      "dropZeroRanks gates the final ROUND — it needs at least one iteration")
-    // e persisted (r12): deg, ew and BOTH legs of the nodes union read it —
-    // unpersisted, the caller's edge derivation (often a join + distinct)
-    // re-executed up to 4x per run. edgesDistinct / the ew repartition:
-    // see [[pageRank]] (r13).
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct()).persist()
-    Caches.register(e)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ew = e.join(deg, "src").repartition(col("src")).persist()
-    Caches.register(ew)
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct().persist()
-    Caches.register(nodes)
-    val init = scale / seeds.length
-    val isSeed = col("node").isin(seeds: _*)
-    val seedBase = ((1000L - dampingMillis) * init) / 1000L
-    var ranks = nodes.select(col("node"),
-      when(isSeed, lit(init)).otherwise(lit(0L)).as("rank"))
-    for (i <- 0 until iters) {
-      val contribs = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst").as("node"), expr("rank div deg").as("c"))
-        .groupBy("node").agg(sum("c").as("in"))
-      var joined = nodes.join(contribs, Seq("node"), "left")
-      if (dropZeroRanks && i == iters - 1) {
-        // rank > 0 on base columns: the seed term is seedBase iff isSeed
-        // (positive unless dampingMillis = 1000), and the damped term
-        // (d·in) div 1000 is ≥ 1 iff in ≥ ⌈1000/d⌉ (in is a sum of
-        // nonnegative floor quotients, never negative)
-        val seedPass = if (seedBase > 0) isSeed else lit(false)
-        val inPass =
-          if (dampingMillis > 0)
-            coalesce(col("in"), lit(0L)) >= (1000L + dampingMillis - 1) / dampingMillis
-          else lit(false)
-        joined = joined.filter(seedPass || inPass)
-      }
-      ranks = joined
-        .select(col("node"),
-          (when(isSeed, lit(seedBase)).otherwise(lit(0L)) +
-            expr(s"($dampingMillis * coalesce(in, 0L)) div 1000")).as("rank"))
-      if ((i + 1) % checkpointEvery == 0) ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
+  /** Rounds between [[pageRank]]'s lineage-bounding checkpoints. */
+  private val PageRankCheckpointEvery = 8
 
   /** Per-node triangle counts over an undirected simple graph — the
     * clustering-structure primitive (local clustering coefficient, spam/

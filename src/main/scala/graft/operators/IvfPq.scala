@@ -45,12 +45,13 @@ object IvfPq {
 
   /** Train the coarse quantizer on the corpus, then the m residual
     * codebooks on the coarse residuals (seeds: lowest-id residuals —
-    * the same [[Pq]] contract).
+    * the same [[Pq]] contract). The corpus quantizes once: the residual
+    * pass reads the frame the coarse Lloyd loop persisted.
     */
   def train(vectors: DataFrame, idCol: String, vecCol: String,
             kc: Int, m: Int, ksub: Int, itersCoarse: Int, itersPq: Int): Model = {
-    val coarse = KMeans.train(vectors, idCol, vecCol, kc, itersCoarse)
     val q = vectors.select(col(idCol).as("id"), KMeans.quantize(col(vecCol)).as("qv"))
+    val coarse = KMeans.lloyd(q, 1, kc, itersCoarse)(0)
     val re = residuals(q, coarse).select(col("id"), col("rv").as("qv"))
     Model(coarse, Pq.trainQuantized(re, m, ksub, itersPq))
   }

@@ -67,39 +67,62 @@ object KMeans {
     * final centroids as k micro-unit arrays (driver-side — k·dim longs).
     */
   def train(vectors: DataFrame, idCol: String, vecCol: String,
-            k: Int, iters: Int): Array[Array[Long]] = {
+            k: Int, iters: Int): Array[Array[Long]] =
+    lloyd(vectors.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv")), 1, k, iters)(0)
+
+  /** The one Lloyd loop: `iters` rounds over an (id, qv) micro-unit frame
+    * whose vectors split into `m` contiguous subspaces, co-training one
+    * k-cell codebook per subspace (m = 1 is plain k-means, [[train]]; m > 1
+    * is [[Pq]]'s product quantizer). Returns `books(s)(c)` = the centroid
+    * of subspace s, cell c (dim/m longs) — driver-side control plane,
+    * k·dim longs total. Seeds are the k lowest-id vectors sliced per
+    * subspace; the argmin is integer L2² with lowest-cid ties; a cell
+    * nobody joins keeps its coordinate. The input frame is persisted as
+    * given, so a caller that reads the same frame again hits the cache.
+    */
+  private[graft] def lloyd(quantized: DataFrame, m: Int, k: Int, iters: Int): Array[Array[Array[Long]]] = {
+    require(m >= 1, s"m must be >= 1, got $m")
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val q = vectors.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-      .persist()
-    Caches.register(q)
-    val spark = vectors.sparkSession
+    val spark = quantized.sparkSession
     import spark.implicits._
-    var cents: Array[Array[Long]] = q.orderBy("id").limit(k)
+    val q = quantized.persist()
+    Caches.register(q)
+    val seeds: Array[Array[Long]] = q.orderBy("id").limit(k)
       .select("qv").as[Array[Long]].collect()
-    require(cents.nonEmpty, "k-means: empty input")
+    require(seeds.nonEmpty, "k-means: empty input")
+    val dim = seeds.head.length
+    require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
+    val subDim = dim / m
+    var books: Array[Array[Array[Long]]] =
+      Array.tabulate(m, seeds.length)((s, c) => seeds(c).slice(s * subDim, (s + 1) * subDim))
     for (_ <- 0 until iters) {
-      // one scan: literal-centroid argmin, then slim integer cell sums.
-      // cid MUST be projected in its own select BELOW the explode: fused
-      // into the generator's projection, Catalyst evaluates the argmin
-      // struct per EXPLODED row (dim× re-evaluation of an interpreted HOF
-      // tree — measured 7.7 s vs 0.65 s per iteration at sf0.1)
-      val withCid = q.select(bestOf(col("qv"), cents).getField("cid").as("cid"),
-        col("qv"))
-      val next = withCid
-        .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
+      // one scan: literal-codebook argmins, then slim integer cell sums.
+      // The m argmins MUST be projected in their own select BELOW the
+      // explode: fused into the generator's projection, Catalyst evaluates
+      // them per EXPLODED row (dim× re-evaluation — measured 7.7 s vs
+      // 0.65 s per iteration at sf0.1)
+      val withC = q.select(graft.plans.NativeHash.pqCodes(col("qv"), books).as("cids"), col("qv"))
+      // the cell key is (cid of pos's subspace, pos): the subspace is
+      // pos div subDim, derived on the driver rather than grouped on
+      val next = withC
+        .select(col("cids"), posexplode(col("qv")).as(Seq("pos", "v")))
+        .select(element_at(col("cids"), (expr(s"pos div $subDim") + 1).cast("int")).as("cid"),
+          col("pos"), col("v"))
         .groupBy("cid", "pos")
         .agg(sum("v").as("s"), count(lit(1)).as("c"))
         // floor mean in PURE long arithmetic (`div`, not `/` — double
         // division loses exactness past 2^53, i.e. ~10¹⁰ docs of micro-units)
-        .select(col("cid"), col("pos"),
-          expr("(s - ((s % c + c) % c)) div c").as("qv"))
+        .select(col("cid"), col("pos"), expr("(s - ((s % c + c) % c)) div c").as("qv"))
         .collect()
-      val updated = cents.map(_.clone())
-      next.foreach(r => updated(r.getInt(0))(r.getInt(1)) = r.getLong(2))
-      cents = updated
+      val updated = books.map(_.map(_.clone()))
+      next.foreach { r =>
+        val pos = r.getInt(1)
+        updated(pos / subDim)(r.getInt(0))(pos % subDim) = r.getLong(2)
+      }
+      books = updated
     }
-    cents
+    books
   }
 
   /** Final assignment against trained centroids: (idCol, cid, d2). */

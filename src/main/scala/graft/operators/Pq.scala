@@ -65,47 +65,10 @@ object Pq {
 
   /** [[train]] over an ALREADY micro-unit-quantized (id, qv) frame — the
     * entry point [[IvfPq]] uses to train codebooks on residual vectors.
+    * Runs the one Lloyd loop, [[KMeans.lloyd]], over m subspaces.
     */
-  def trainQuantized(quantized: DataFrame, m: Int, ksub: Int, iters: Int): Array[Array[Array[Long]]] = {
-    require(m >= 1, s"m must be >= 1, got $m")
-    require(ksub >= 1, s"ksub must be >= 1, got $ksub")
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    val spark = quantized.sparkSession
-    import spark.implicits._
-    val q = quantized.select(col("id"), col("qv")).persist()
-    Caches.register(q)
-    val seeds: Array[Array[Long]] = q.orderBy("id").limit(ksub)
-      .select("qv").as[Array[Long]].collect()
-    require(seeds.nonEmpty, "pq: empty input")
-    val dim = seeds.head.length
-    require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
-    val subDim = dim / m
-    var books: Array[Array[Array[Long]]] =
-      Array.tabulate(m, seeds.length)((s, c) => seeds(c).slice(s * subDim, (s + 1) * subDim))
-    for (_ <- 0 until iters) {
-      // the KMeans lesson verbatim: the m argmins live in their OWN
-      // projection; fused into the generator's projection Catalyst would
-      // re-evaluate the whole interpreted HOF tree once per exploded cell
-      val withC = q.select(cidArray(col("qv"), subDim, books).as("cids"), col("qv"))
-      val next = withC
-        .select(col("cids"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .select(expr(s"pos div $subDim").as("sub"),
-          element_at(col("cids"), (expr(s"pos div $subDim") + 1).cast("int")).as("cid"),
-          col("pos"), col("v"))
-        .groupBy("sub", "cid", "pos")
-        .agg(sum("v").as("s"), count(lit(1)).as("c"))
-        .select(col("sub"), col("cid"), col("pos"),
-          expr("(s - ((s % c + c) % c)) div c").as("qv"))
-        .collect()
-      val updated = books.map(_.map(_.clone()))
-      next.foreach { r =>
-        val s = r.getLong(0).toInt
-        updated(s)(r.getInt(1))(r.getInt(2) - s * subDim) = r.getLong(3)
-      }
-      books = updated
-    }
-    books
-  }
+  def trainQuantized(quantized: DataFrame, m: Int, ksub: Int, iters: Int): Array[Array[Array[Long]]] =
+    KMeans.lloyd(quantized, m, ksub, iters)
 
   /** The m-byte code store: (idCol, sub, code) — doc-local argmin per
     * subspace against literal codebooks, zero shuffle.

@@ -1436,23 +1436,37 @@ object AnalyticsQueries {
       concat(lit("c"), shiftright(n, 1).cast("string")))
       .otherwise(concat(lit("s"), shiftright(n, 1).cast("string")))
 
-  def qPageRank(s: SparkSession, dir: String): DataFrame = {
-    // distinct on the INT key pair (r13): the dedup exchange carries two
-    // longs; node strings are decoded only on the final node-sized frame
+  /** The distinct customer→supplier trade edges (src = 2·custkey,
+    * dst = 2·suppkey + 1, see [[tradeNode]]), persisted and registered —
+    * the one edge frame behind q_pagerank, q_ppr, q_bfs_hops and q_hits.
+    * The distinct runs on the INT key pair (r13): the dedup exchange
+    * carries two longs, and node strings are decoded only on the final
+    * node-sized frame. Persisted because every caller reads it twice
+    * (both symmetrization legs, or the operator's two edge copies; r12:
+    * o⋈l ran twice).
+    */
+  private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     val edges = table(s, dir, "orders").join(table(s, dir, "lineitem"),
         col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).cast("long").as("c"),
-        (col("l_suppkey") * 2 + 1).cast("long").as("ss"))
+      .select((col("o_custkey") * 2).cast("long").as("src"),
+        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
       .distinct()
-      .persist() // both symmetrization legs read it (r12: o⋈l ran twice)
+      .persist()
     graft.operators.Caches.register(edges)
-    val sym = edges.select(col("c").as("src"), col("ss").as("dst"))
-      .union(edges.select(col("ss").as("src"), col("c").as("dst")))
-    // edgesDistinct (r13): `edges` is distinct and the two legs are
-    // disjoint (customers even, suppliers odd), so `sym` is provably
-    // duplicate-free — the operator's canonical distinct would be a no-op
-    // exchange of the full symmetric frame
-    graft.operators.Graph.pageRank(sym, "src", "dst", iters = 3,
+    edges
+  }
+
+  /** [[tradeEdges]] in both directions. Duplicate-free: the edges are
+    * distinct and the two legs are disjoint (customers even, suppliers
+    * odd), so the walk operators may skip their canonical distinct.
+    */
+  private def symTradeEdges(s: SparkSession, dir: String): DataFrame = {
+    val edges = tradeEdges(s, dir)
+    edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  def qPageRank(s: SparkSession, dir: String): DataFrame = {
+    graft.operators.Graph.pageRank(symTradeEdges(s, dir), "src", "dst", iters = 3,
         edgesDistinct = true)
       .select(tradeNode(col("node")).as("node"), col("rank"))
       .orderBy("node")
@@ -1499,30 +1513,19 @@ object AnalyticsQueries {
   /** Random-walk-with-restart relevance to five seed customers over the
     * same trade graph as [[qPageRank]] — "which suppliers (and
     * fellow customers) sit closest to this cohort". See
-    * [[graft.operators.Graph.personalizedPageRank]]; every floor-division
+    * [[graft.operators.Graph.pageRank]] with seeds; every floor-division
     * round replays in SQL, ranks hash bit-exact.
     */
   def qPersonalizedPagerank(s: SparkSession, dir: String): DataFrame = {
-    // LONG node encoding + int-pair distinct (r13, see [[tradeNode]]):
-    // seeds c1..c5 are customers 1..5 = encoded longs 2,4,6,8,10
-    val edges = table(s, dir, "orders").join(table(s, dir, "lineitem"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).cast("long").as("c"),
-        (col("l_suppkey") * 2 + 1).cast("long").as("ss"))
-      .distinct()
-      .persist() // both symmetrization legs read it (r12: o⋈l ran twice)
-    graft.operators.Caches.register(edges)
-    val sym = edges.select(col("c").as("src"), col("ss").as("dst"))
-      .union(edges.select(col("ss").as("src"), col("c").as("dst")))
-    // dropZeroRanks (r13): the rank>0 gate is decided inside the operator's
-    // FINAL round from base columns, replacing r12's localCheckpoint +
-    // filter-on-computed-rank (the filter pushed through the 3-round plan
-    // cost ~1.7 s/run of optimizer constraint re-derivation; the checkpoint
-    // traded it for an eager extra materialization — both gone).
-    // edgesDistinct: see qPageRank — distinct edges, even/odd-disjoint legs
-    graft.operators.Graph.personalizedPageRank(sym, "src", "dst",
-        seeds = Seq(2L, 4L, 6L, 8L, 10L), iters = 3, edgesDistinct = true,
-        dropZeroRanks = true)
+    // seeds c1..c5 are customers 1..5 = encoded longs 2,4,6,8,10 (see
+    // [[tradeNode]]). dropZeroRanks (r13): the rank>0 gate is decided
+    // inside the operator's FINAL round from base columns, replacing r12's
+    // localCheckpoint + filter-on-computed-rank (the filter pushed through
+    // the 3-round plan cost ~1.7 s/run of optimizer constraint
+    // re-derivation; the checkpoint traded it for an eager extra
+    // materialization — both gone).
+    graft.operators.Graph.pageRank(symTradeEdges(s, dir), "src", "dst", iters = 3,
+        seeds = Seq(2L, 4L, 6L, 8L, 10L), edgesDistinct = true, dropZeroRanks = true)
       .select(tradeNode(col("node")).as("node"), col("rank"))
       .orderBy("node")
   }
@@ -1674,17 +1677,9 @@ object AnalyticsQueries {
     * output is the exact min-hop distance for everything within 3.
     */
   def qBfsHops(s: SparkSession, dir: String): DataFrame = {
-    // LONG node encoding + int-pair distinct (r13, see [[tradeNode]]):
-    // seeds c1..c3 = encoded longs 2,4,6
-    val edges = table(s, dir, "orders").join(table(s, dir, "lineitem"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).cast("long").as("src"),
-        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-      .distinct()
-      .persist() // both symmetrization legs read it (r12: o⋈l ran twice)
-    graft.operators.Caches.register(edges)
-    // symDistinct: distinct int pairs, bipartite even/odd — see qKcore
-    graft.operators.Graph.bfsHops(edges, "src", "dst",
+    // seeds c1..c3 = encoded longs 2,4,6 (see [[tradeNode]]); symDistinct:
+    // distinct int pairs, bipartite even/odd — see qKcore
+    graft.operators.Graph.bfsHops(tradeEdges(s, dir), "src", "dst",
         seeds = Seq(2L, 4L, 6L), rounds = 3, symDistinct = true)
       .select(tradeNode(col("node")).as("node"), col("hops"))
       .orderBy("node")
@@ -1719,18 +1714,10 @@ object AnalyticsQueries {
     * rounds including the normalization totals as scalar subqueries.
     */
   def qHits(s: SparkSession, dir: String): DataFrame = {
-    // LONG node encoding (r13, see [[tradeNode]]); the int-pair distinct is
-    // persisted HERE and flagged edgesDistinct so the operator's two
-    // pre-partitioned edge copies both read the cached canonical frame
-    // instead of re-deriving o⋈l + distinct
-    val edges = table(s, dir, "orders").join(table(s, dir, "lineitem"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).cast("long").as("src"),
-        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-      .distinct()
-      .persist()
-    graft.operators.Caches.register(edges)
-    graft.operators.Graph.hits(edges, "src", "dst", iters = 2, edgesDistinct = true)
+    // the persisted distinct edges are flagged edgesDistinct so the
+    // operator's two pre-partitioned edge copies both read the cached
+    // canonical frame instead of re-deriving o⋈l + distinct
+    graft.operators.Graph.hits(tradeEdges(s, dir), "src", "dst", iters = 2, edgesDistinct = true)
       .select(tradeNode(col("node")).as("node"), col("hub"), col("auth"))
       .orderBy("node")
   }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,12 +45,6 @@ object SheetsSource {
     * header-named columns (the sheet's own `range` field is the already-
     * applied server-side range; `range` here is the config's request range).
     */
-  def toTable(spark: SparkSession, path: String, range: Option[String]): DataFrame = {
-    import spark.implicits._
-    val grid = read(spark, path)
-      .select(col("sheet"), col("sheet_idx"), col("row_idx"), col("cells"))
-      .as[(String, Int, Long, Seq[String])]
-      .map { case (s, i, r, c) => GridRow(s, i, r, c) }
-    ExcelSource.toTable(grid, range)
-  }
+  def toTable(spark: SparkSession, path: String, range: Option[String]): DataFrame =
+    ExcelSource.toTableDF(read(spark, path), range)
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.operators.{MapRule, Mapper}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -10,29 +9,13 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   * (/root/reference/src/Command/ConsumerCommand.php,
   * /root/reference/src/Service/Kafka/KafkaProducer.php). Here the same
   * operators run on Structured Streaming frames — `readStream` from a
-  * file/Kafka source, identical Mapper, stateful dedupe, `writeStream` out.
+  * file/Kafka source, the identical `Mapper.mapColumns` (pure projection,
+  * so it takes streaming frames unchanged), stateful dedupe, `writeStream`
+  * out; gap sessions are [[StreamSessionize]].
   * Kafka itself isn't in this container; sources are file/memory streams,
   * which exercise the identical unbounded-processing semantics.
   */
-/** One event entering [[StreamPipeline.sessionize]]. `ts` carries the
-  * watermarked event-time column through to the stateful operator (the
-  * unsupported-operation checker requires it in the child plan).
-  */
-final case class SessionEvent(key: String, tsMs: Long, value: Double, ts: java.sql.Timestamp)
-
-/** One closed (or in-flight) session summary — the sessionize state AND
-  * output row; no per-event buffering.
-  */
-final case class SessionSummary(key: String, startMs: Long, endMs: Long,
-                                nEvents: Long, totalValue: Double)
-
 object StreamPipeline {
-
-  /** Map+clean a raw feed stream: [[Mapper]] is pure projection, so it
-    * applies to streaming frames unchanged.
-    */
-  def mapStream(feed: DataFrame, rules: Seq[MapRule], supplierId: Long, version: Long): DataFrame =
-    Mapper.mapColumns(feed, rules, supplierId, version)
 
   /** Stateful last-write-wins dedupe: keeps, per key, the row with the
     * highest `orderCol` (a long) seen so far and emits it on every update —
@@ -50,61 +33,6 @@ object StreamPipeline {
         state.update(best)
         best
       }
-  }
-
-  /** Gap-based sessionization with event-time timeout — the streaming twin
-    * of AnalyticsQueries.qEventsSessionize. Per key, events within
-    * `gapMs` of the session's end extend it; a watermark past end+gap
-    * closes and EMITS the session via the state timeout. State per key is
-    * one open session summary (bounded, no event buffering).
-    */
-  def sessionize(events: DataFrame, tsCol: String, keyCol: String,
-                 gapMs: Long, watermark: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
-    implicit val evtEnc = Encoders.product[SessionEvent]
-    implicit val sessEnc = Encoders.product[SessionSummary]
-    implicit val keyEnc = Encoders.STRING
-
-    events
-      .withWatermark(tsCol, watermark)
-      .select(col(keyCol).cast("string").as("key"),
-        (col(tsCol).cast("double") * 1000).cast("long").as("tsMs"),
-        col("value").cast("double").as("value"),
-        // bare attribute alias — a cast here would strip the watermark tag
-        col(tsCol).as("ts"))
-      .as[SessionEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SessionSummary, SessionSummary](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[SessionEvent], state: GroupState[SessionSummary]) =>
-          if (state.hasTimedOut) {
-            val closed = state.get
-            state.remove()
-            Iterator(closed)
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsMs)
-            var cur = state.getOption.orNull
-            val closed = scala.collection.mutable.ArrayBuffer[SessionSummary]()
-            sorted.foreach { e =>
-              cur match {
-                case null =>
-                  cur = SessionSummary(key, e.tsMs, e.tsMs, 1L, e.value)
-                case s if e.tsMs - s.endMs <= gapMs =>
-                  cur = s.copy(endMs = math.max(s.endMs, e.tsMs),
-                    nEvents = s.nEvents + 1, totalValue = s.totalValue + e.value)
-                case s =>
-                  closed += s
-                  cur = SessionSummary(key, e.tsMs, e.tsMs, 1L, e.value)
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              state.setTimeoutTimestamp(cur.endMs + gapMs)
-            }
-            closed.iterator
-          }
-      }
-      .toDF()
   }
 
   /** Watermarked tumbling-window aggregation over an event stream — the

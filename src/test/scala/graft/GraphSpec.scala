@@ -133,8 +133,8 @@ class GraphSpec extends SparkSpec {
   test("personalized pageRank matches the reference model; mass stays near seeds") {
     val g = Seq("a" -> "b", "b" -> "a", "b" -> "c", "c" -> "b",
       "c" -> "d", "d" -> "c", "x" -> "y", "y" -> "x")
-    val got = Graph.personalizedPageRank(g.toDF("src", "dst"), "src", "dst",
-        seeds = Seq("a"), iters = 3)
+    val got = Graph.pageRank(g.toDF("src", "dst"), "src", "dst",
+        iters = 3, seeds = Seq("a"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     graft.operators.Caches.release()
     assert(got === pprRef(g, Seq("a"), 3))
@@ -143,6 +143,31 @@ class GraphSpec extends SparkSpec {
     // mass reaches exactly the seed's component, thinning toward the far end
     assert(Seq("a", "b", "c", "d").forall(got(_) > 0L))
     assert(got("d") < got("b")) // 3 hops out sits below the seed's neighbor
+  }
+
+  test("a repeated seed is one seed: its restart mass is not lost") {
+    val g = Seq("a" -> "b", "b" -> "a", "b" -> "c", "c" -> "b", "c" -> "d")
+    def ppr(seeds: Seq[String]) = {
+      val out = Graph.pageRank(g.toDF("src", "dst"), "src", "dst", iters = 3, seeds = seeds)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      graft.operators.Caches.release()
+      out
+    }
+    val once = ppr(Seq("a", "c"))
+    assert(ppr(Seq("a", "a", "c")) === once)
+    assert(once === pprRef(g, Seq("a", "c"), 3))
+  }
+
+  test("dropZeroRanks gate equals filter(rank > 0) for the uniform restart too") {
+    // damping 1000: the restart term is 0, so e (no in-edges) ranks 0 and
+    // only the in-flow side of the gate keeps the other nodes
+    val g = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "d", "e" -> "a")
+    val gated = Graph.pageRank(g.toDF("src", "dst"), "src", "dst", iters = 2,
+        dampingMillis = 1000, dropZeroRanks = true)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    graft.operators.Caches.release()
+    assert(gated === prRef(g, 2, damp = 1000L).filter(_._2 > 0))
+    assert(gated.keySet === Set("a", "b", "c", "d"))
   }
 
   test("dropZeroRanks gate equals filter(rank > 0) on the real trade graph (r13 route equality)") {
@@ -157,9 +182,9 @@ class GraphSpec extends SparkSpec {
     val sym = edges.select(col("c").as("src"), col("ss").as("dst"))
       .union(edges.select(col("ss").as("src"), col("c").as("dst")))
     val seeds: Seq[Any] = Seq(2L, 4L, 6L, 8L, 10L)
-    val gated = Graph.personalizedPageRank(sym, "src", "dst", seeds, iters = 3,
+    val gated = Graph.pageRank(sym, "src", "dst", iters = 3, seeds = seeds,
       edgesDistinct = true, dropZeroRanks = true)
-    val filtered = Graph.personalizedPageRank(sym, "src", "dst", seeds, iters = 3,
+    val filtered = Graph.pageRank(sym, "src", "dst", iters = 3, seeds = seeds,
         edgesDistinct = true)
       .localCheckpoint().filter(col("rank") > 0)
     assert(gated.exceptAll(filtered).isEmpty && filtered.exceptAll(gated).isEmpty)

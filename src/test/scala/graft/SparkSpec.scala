@@ -57,19 +57,19 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  // tests exercise semantics on KB-scale data: wide initial shuffles (the
-  // SPARK_GRAFT_INIT_PARTS scale knob, measured +60% suite wall-clock at
-  // 256) only add per-shuffle scheduling overhead here, so specs pin the
-  // knob to the thread count regardless of the environment. Scale behavior
-  // is measured by the bench, not the unit suite.
+  // tests exercise semantics on KB-scale data: wide initial shuffles
+  // (measured +60% suite wall-clock at an initialPartitionNum of 256) only
+  // add per-shuffle scheduling overhead here, so specs pin the initial
+  // width to the thread count regardless of the environment. Scale
+  // behavior is measured by the bench, not the unit suite.
   lazy val session: SparkSession = {
     val s = GraftSession.tune(SparkSession.builder()
         .master("local[4]")
         .appName("graft-test")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "4"))
-      // AFTER tune: builder options are last-write-wins, and tune() sets the
-      // production-posture 256
+      // AFTER tune: builder options are last-write-wins, so this stays the
+      // session's setting whatever tune() grows to set
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "4")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.MapRule
-import graft.streaming.StreamPipeline
+import graft.operators.{MapRule, Mapper}
+import graft.streaming.{StreamPipeline, StreamSessionize}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -14,7 +14,7 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(String, String, String, Long)]
     val feed = in.toDF().toDF("raw_upc", "raw_price", "raw_qty", "seq")
 
-    val mapped = StreamPipeline.mapStream(feed,
+    val mapped = Mapper.mapColumns(feed,
       Seq(MapRule("upc", "raw_upc"), MapRule("price", "raw_price"),
         MapRule("qty", "raw_qty"), MapRule("seq", "seq")),
       supplierId = 5L, version = 2L)
@@ -55,33 +55,34 @@ class StreamingSpec extends SparkSpec {
 
   test("stateful sessionization: gap splits sessions, watermark closes them") {
     implicit val sq = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val events = in.toDF().toDF("ts", "user", "value")
+    val in = MemoryStream[(Long, Long, Long)]
+    val events = in.toDF().toDF("user_id", "ts_ms", "value_u")
+    def ms(ts: String) = Timestamp.valueOf(ts).getTime
+    val (userA, userB) = (1L, 2L)
 
-    val sessions = graft.streaming.StreamPipeline.sessionize(
-      events, "ts", "user", gapMs = 30 * 60 * 1000L, watermark = "0 seconds")
+    val sessions = StreamSessionize.sessionize(events, gap = "30 minutes")
     val q = sessions.writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
     try {
       // user A: two events 10 min apart (one session), then 2h silence,
-      // then another event (second session)
+      // then another event (second session); values in micro-units
       in.addData(
-        (Timestamp.valueOf("2024-01-01 00:00:00"), "A", 1.0),
-        (Timestamp.valueOf("2024-01-01 00:10:00"), "A", 2.0))
+        (userA, ms("2024-01-01 00:00:00"), 1000000L),
+        (userA, ms("2024-01-01 00:10:00"), 2000000L))
       q.processAllAvailable()
-      in.addData((Timestamp.valueOf("2024-01-01 02:10:00"), "A", 5.0))
+      in.addData((userA, ms("2024-01-01 02:10:00"), 5000000L))
       q.processAllAvailable()
-      // advance the watermark far enough to time out the open session
-      in.addData((Timestamp.valueOf("2024-01-01 09:00:00"), "B", 0.5))
+      // advance the watermark far enough to close the open session
+      in.addData((userB, ms("2024-01-01 09:00:00"), 500000L))
       q.processAllAvailable()
-      in.addData((Timestamp.valueOf("2024-01-01 23:00:00"), "B", 0.5))
+      in.addData((userB, ms("2024-01-01 23:00:00"), 500000L))
       q.processAllAvailable()
 
-      val out = spark.table("sess_out").orderBy("key", "startMs").collect()
-      val a = out.filter(_.getString(0) == "A")
+      val out = spark.table("sess_out").orderBy("user_id", "session_start_ms").collect()
+      val a = out.filter(_.getAs[Long]("user_id") == userA)
       assert(a.length == 2, s"expected 2 closed sessions for A, got ${out.mkString(";")}")
-      assert(a(0).getAs[Long]("nEvents") == 2 && a(0).getAs[Double]("totalValue") == 3.0)
-      assert(a(1).getAs[Long]("nEvents") == 1 && a(1).getAs[Double]("totalValue") == 5.0)
+      assert(a(0).getAs[Long]("n_events") == 2 && a(0).getAs[Long]("value_u") == 3000000L)
+      assert(a(1).getAs[Long]("n_events") == 1 && a(1).getAs[Long]("value_u") == 5000000L)
     } finally q.stop()
   }
 
