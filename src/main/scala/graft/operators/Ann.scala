@@ -156,10 +156,9 @@ object Ann {
     */
   def knnGraph(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
                nTables: Int = 8, planesPerTable: Int = 8): DataFrame = {
-    val c = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"),
-        VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks"))
-      .persist() // exploded key stream (twice) + two score join-backs
-    Caches.register(c)
+    // exploded key stream (twice) + two score join-backs
+    val c = Caches.persist(corpus.select(col(idCol).as("vid"), col(vecCol).as("v"),
+        VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks")))
     val src = c.select(col("vid"), explode(col("ks")).as("bk"))
     val dst = c.select(col("vid").as("nid"), explode(col("ks")).as("bk"))
     val cand = src.join(dst, Seq("bk"))
@@ -226,10 +225,9 @@ object Ann {
               vecCol: String, k: Int, nTables: Int = 8, planesPerTable: Int = 8): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks"))
-      .persist() // exploded key stream + score join-back both read it
-    Caches.register(c)
+    // exploded key stream + score join-back both read it
+    val c = Caches.persist(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks")))
     val qe = q.select(col("query_id"), explode(col("ks")).as("bk"))
     val ce = c.select(col("neighbor_id"), explode(col("ks")).as("bk"))
     val cand = ce.join(broadcast(qe), Seq("bk"))

@@ -1,18 +1,33 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Registry of frames persisted INTERNALLY by graft operators
-  * (Dedup.nearDupPairs' canonical groups, Scale.globalRowNumber's sorted
-  * frame). Spark's CacheManager pins persisted frames for the session
-  * lifetime, so long-running processes (ConfigConsumer, query loops) call
-  * [[release]] between units of work. Releasing is always safe — an
-  * unpersisted frame recomputes, results never change.
+/** The one way graft pins a working frame. Spark's CacheManager holds a
+  * persisted frame for the session lifetime, so every frame an operator
+  * pins goes through [[persist]], and long-running processes
+  * (ConfigConsumer, query loops) call [[release]] between units of work.
+  * Releasing is always safe — an unpersisted frame recomputes, results
+  * never change. Only frames graft pinned are ever unpinned: a frame the
+  * caller persisted stays cached.
   */
 object Caches {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  def register(df: DataFrame): Unit = live.add(df)
+  /** Persists `df` at the default level and queues it for [[release]]. A
+    * frame whose plan is already cached (by the caller, or earlier by
+    * graft) is returned as it is and not queued again.
+    */
+  def persist(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) live.add(df.persist())
+    df
+  }
+
+  /** Early release of one frame: unpins `df` only if graft pinned it
+    * through [[persist]]; a frame graft did not pin is left as it is.
+    */
+  def unpersist(df: DataFrame): Unit =
+    if (live.remove(df)) df.unpersist(false)
 
   def release(): Unit = {
     var df = live.poll()

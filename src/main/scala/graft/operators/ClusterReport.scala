@@ -30,9 +30,8 @@ object ClusterReport {
   def report(vecs: DataFrame, labelCol: String, vecCol: String): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val q = vecs.select(col(labelCol).cast("int").as("label"),
-      KMeans.quantize(col(vecCol)).as("qv")).persist()
-    Caches.register(q)
+    val q = Caches.persist(vecs.select(col(labelCol).cast("int").as("label"),
+      KMeans.quantize(col(vecCol)).as("qv")))
 
     val cents: Map[Int, Array[Long]] = q
       .select(col("label"), posexplode(col("qv")).as(Seq("pos", "v")))

@@ -68,12 +68,10 @@ object Containment {
                             threshold: Double, shingleN: Int,
                             dfCap: Long): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    val sets = docs
+    val sets = Caches.persist(docs
       .select(col(idCol).as("__id"),
         sort_array(graft.plans.NativeHash.shingleSet(col(textCol), shingleN)).as("__gs"))
-      .select(col("__id"), col("__gs"), size(col("__gs")).as("__sz"))
-      .persist()
-    Caches.register(sets)
+      .select(col("__id"), col("__gs"), size(col("__gs")).as("__sz")))
     val inv = sets.select(col("__id"), explode(col("__gs")).as("__g"))
     val rare = inv.join(
       inv.groupBy("__g").agg(count(lit(1)).as("__df"))
@@ -110,8 +108,7 @@ object Containment {
   def probeNotContained(corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
                         threshold: Double, shingleN: Int = 5,
                         dfCap: Long = Long.MaxValue): DataFrame = {
-    val corpusSets = buildContainmentIndex(corpus, idCol, textCol, shingleN).persist()
-    Caches.register(corpusSets)
+    val corpusSets = Caches.persist(buildContainmentIndex(corpus, idCol, textCol, shingleN))
     probeIndexNotContained(corpusSets, batch, idCol, textCol, threshold, shingleN, dfCap)
   }
 
@@ -145,8 +142,7 @@ object Containment {
         corpusInv.groupBy("__g").agg(count(lit(1)).as("__df"))
           .filter(col("__df") <= dfCap).select("__g"),
         Seq("__g"))
-    val batchSets = buildContainmentIndex(batch, idCol, textCol, shingleN).persist()
-    Caches.register(batchSets)
+    val batchSets = Caches.persist(buildContainmentIndex(batch, idCol, textCol, shingleN))
     val batchInv = batchSets.select(col("__id").as("__bid"), explode(col("__gs")).as("__g"))
     val cands = rareInv.join(broadcast(batchInv), Seq("__g"))
       .select("__bid", "__cid").distinct()

@@ -37,11 +37,9 @@ object Cooccur {
     // persisted: three consumers read the tokenized stream (unigram counts,
     // bigram counts, the n_bigrams total) — without the barrier the full
     // corpus re-tokenizes once per pass
-    val toks = docs.select(TextFunctions.tokens(col(textCol)).as("__t")).persist()
-    Caches.register(toks)
-    val uni = toks.select(explode(col("__t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c")).persist()
-    Caches.register(uni)
+    val toks = Caches.persist(docs.select(TextFunctions.tokens(col(textCol)).as("__t")))
+    val uni = Caches.persist(toks.select(explode(col("__t")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")))
     // docs with <2 tokens contribute no bigrams (wordShingles' whole-doc
     // fallback gram would poison the pair counts here)
     val bi = toks.filter(size(col("__t")) >= 2)

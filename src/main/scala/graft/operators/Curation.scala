@@ -20,7 +20,7 @@ object Curation {
     * so downstream stages can re-weight by how far a source clears the bar.
     *
     * Plan, sized for 100 TB: the scoring pass runs once (persisted slim
-    * (id, src, quality) frame, registered with [[Caches]]); the per-source
+    * (id, src, quality) frame, pinned through [[Caches]]); the per-source
     * stats aggregate it with map-side combine down to |distinct sources|
     * rows, and the corpus mean derives from those stats (a second
     * aggregation of an already-tiny frame — the documents are NOT scanned
@@ -42,10 +42,8 @@ object Curation {
     */
   def sourceQualityGate(docs: DataFrame, idCol: String, srcCol: String,
                         quality: Column): DataFrame = {
-    val scored = docs
-      .select(col(idCol), col(srcCol), quality.as("quality"))
-      .persist()
-    Caches.register(scored)
+    val scored = Caches.persist(docs
+      .select(col(idCol), col(srcCol), quality.as("quality")))
     val srcStats = scored.groupBy(col(srcCol))
       .agg(sum(round(col("quality") * 1e6).cast("long")).as("__qsum"),
         count(lit(1)).as("src_docs"))
@@ -116,11 +114,9 @@ object Curation {
                   charsCol: String): DataFrame = {
     // persisted: both aggregations below consume it — without this the
     // documents (and the md5/tokenize work) would be scanned twice
-    val slim = docs.select(col(srcCol), col(charsCol).as("__chars"),
+    val slim = Caches.persist(docs.select(col(srcCol), col(charsCol).as("__chars"),
       md5(col(textCol)).as("__fp"),
-      graft.functions.TextFunctions.tokenCountWs(col(textCol)).cast("long").as("__tok"))
-      .persist()
-    Caches.register(slim)
+      graft.functions.TextFunctions.tokenCountWs(col(textCol)).cast("long").as("__tok")))
     val base = slim.groupBy(col(srcCol)).agg(
       count(lit(1)).as("n_docs"),
       sum(col("__tok")).as("total_tokens"),
@@ -182,11 +178,9 @@ object Curation {
     val m = 1 << p
     val maxRho = Sketch.MaxRho
     val (bucket, rho) = Sketch.hllProjection(col(textCol), p)
-    val slim = docs.select(col(srcCol), col(charsCol).as("__chars"),
+    val slim = Caches.persist(docs.select(col(srcCol), col(charsCol).as("__chars"),
       graft.functions.TextFunctions.tokenCountWs(col(textCol)).cast("long").as("__tok"),
-      bucket.as("__bucket"), rho.as("__rho"))
-      .persist()
-    Caches.register(slim)
+      bucket.as("__bucket"), rho.as("__rho")))
     val base = slim.groupBy(col(srcCol)).agg(
       count(lit(1)).as("n_docs"),
       sum(col("__tok")).as("total_tokens"))
@@ -419,11 +413,9 @@ object Curation {
     * to decimal(38,0) — the documented [[vocabConcentration]] trade.
     */
   def distributionDistance(docs: DataFrame, groupCol: String, textCol: String): DataFrame = {
-    val counts = docs
+    val counts = Caches.persist(docs
       .select(col(groupCol).as("g"), explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("g", "w").agg(count(lit(1)).as("c"))
-      .persist()
-    Caches.register(counts)
+      .groupBy("g", "w").agg(count(lit(1)).as("c")))
     val totals = counts.groupBy("g").agg(sum("c").as("m"))
     val a = counts.join(broadcast(totals), "g")
       .select(col("g").as("ga"), col("w"), col("c").as("ca"), col("m").as("ma"))

@@ -104,11 +104,9 @@ object Dedup {
     // (id, bands longs) projection so the signature (the dominant map cost
     // over a 100 TB corpus: one pass over every token) is computed ONCE
     // per document, not once per join side
-    val keys = docs.select(
+    val keys = Caches.persist(docs.select(
       col(idCol).as("id"),
-      bandKeys(NativeHash.minhashSignature(col(textCol), bands * r), bands, r).as("bks"))
-      .persist()
-    Caches.register(keys)
+      bandKeys(NativeHash.minhashSignature(col(textCol), bands * r), bands, r).as("bks")))
     val sigs = keys.select(col("id"), explode(col("bks")).as("bk"))
     sigs.as("a")
       .join(sigs.as("b"), col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
@@ -175,19 +173,15 @@ object Dedup {
     // set identity. Only the slim (id, set_key) projection persists (read by
     // the skeleton agg AND the id→g attach); the md5 content key never rides
     // a pairwise shuffle (r12).
-    val keyedMd5 = docsW.select(col(idCol).as("id"), setKey(col(textCol), shingleN).as("set_key"))
-      .persist()
-    Caches.register(keyedMd5)
+    val keyedMd5 = Caches.persist(
+      docsW.select(col(idCol).as("id"), setKey(col(textCol), shingleN).as("set_key")))
     // group skeleton: min id + size per distinct set — pure min/count agg,
     // bounded state under ANY duplication factor (no collect_list)
-    val skelMd5 = keyedMd5.groupBy("set_key")
-      .agg(min(col("id")).as("g"), count(lit(1)).as("n"))
-      .persist() // read by keyed attach, groups build, and skel consumers
-    Caches.register(skelMd5)
-    val keyed = keyedMd5.join(skelMd5.select("set_key", "g"), "set_key")
-      .select(col("id"), col("g"))
-      .persist()
-    Caches.register(keyed)
+    // read by keyed attach, groups build, and skel consumers
+    val skelMd5 = Caches.persist(keyedMd5.groupBy("set_key")
+      .agg(min(col("id")).as("g"), count(lit(1)).as("n")))
+    val keyed = Caches.persist(keyedMd5.join(skelMd5.select("set_key", "g"), "set_key")
+      .select(col("id"), col("g")))
     // rep words: tokenization re-runs only for the one representative doc
     // of each distinct set — keyed by the LONG g from here on.
     // The repartition(g) is load-bearing (guide §2.4 "share one exchange"):
@@ -203,12 +197,10 @@ object Dedup {
     // route: the 4/5 warm chain 3.2 s with the partitioning vs 8.7 s
     // without; one slim rep-words shuffle buys exchange-free descendants).
     val units = setUnits(shingleN)
-    val groups = skelMd5.select(col("g"))
+    val groups = Caches.persist(skelMd5.select(col("g"))
       .join(docs.select(col(idCol).as("g"), col(textCol).as("__text")), "g")
       .select(col("g"), sort_array(units(col("__text"))).as("words"))
-      .repartition(col("g"))
-      .persist()
-    Caches.register(groups)
+      .repartition(col("g")))
     SetGraph(keyed, skelMd5.select("g", "n"), groups, repPairs(skelMd5, groups))
   }
 
@@ -368,12 +360,10 @@ object Dedup {
     val g = setGraph(docs, idCol, textCol, threshold, bands = 20, r = 2,
       shingleN = 1, broadcastThreshold = 256L)
     // per-group per-source member counts — slim (g, src, cnt)
-    val gsrc = g.keyed
+    val gsrc = Caches.persist(g.keyed
       .join(docs.select(col(idCol).as("id"), col(srcCol).as("src")), "id")
       .groupBy("g", "src").agg(count(lit(1)).as("cnt"))
-      .withColumnRenamed("g", "set_key")
-      .persist()
-    Caches.register(gsrc)
+      .withColumnRenamed("g", "set_key"))
     // the verified rep-pair stream is read three times (cross products +
     // both neighbor directions) — persist it or the banded candidate +
     // verify pipeline re-runs per consumer. Width is PINNED at persist
@@ -382,10 +372,8 @@ object Dedup {
     // stream near-single-threaded (probe: crossPairs 1.0 s, partners 1.5 s,
     // nDocs 1.6 s warm — map-bound on one core); repartition(n, ka) is an
     // explicit count, which AQE leaves alone.
-    val eDir = g.repPairs.select(col("id_a").as("ka"), col("id_b").as("kb"))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("ka"))
-      .persist()
-    Caches.register(eDir)
+    val eDir = Caches.persist(g.repPairs.select(col("id_a").as("ka"), col("id_b").as("kb"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("ka")))
     val eBoth = eDir.unionByName(eDir.select(col("kb").as("ka"), col("ka").as("kb")))
     // r13 (guide §3.1): on dense near-dup corpora the rep-pair stream is
     // ~pairwise-sized (698k rows at sf0.1/t=0.8) while gsrc stays SET-GRAIN
@@ -561,17 +549,15 @@ object Dedup {
     // substrate: an opaque set identity to every consumer, and the long
     // relabel the downstream family did per-query now happens nowhere)
     val sub = prefixSub(docs, idCol, textCol, tNum, tDen, shingleN)
-    val repPairs = sub.repPairs.persist() // read by CC AND consumers
-    Caches.register(repPairs)
+    val repPairs = Caches.persist(sub.repPairs) // read by CC AND consumers
     // (node, comp) for TOUCHED rep nodes; an edge-less set is its own
     // cluster via the coalesce — comp over group-min ids IS the global
     // min doc id of the component, since every g is its group's min
     val labels = Graph.connectedComponents(repPairs, "id_a", "id_b")
-    val setLbl = sub.skel
+    // read by the size agg AND the per-doc attach
+    val setLbl = Caches.persist(sub.skel
       .join(labels.withColumnRenamed("node", "g"), Seq("g"), "left")
-      .select(col("g").as("set_key"), coalesce(col("comp"), col("g")).as("cluster_id"), col("n"))
-      .persist() // read by the size agg AND the per-doc attach
-    Caches.register(setLbl)
+      .select(col("g").as("set_key"), coalesce(col("comp"), col("g")).as("cluster_id"), col("n")))
     ClusterSubstrate(sub.keyed.select(col("id"), col("g").as("set_key")), repPairs, setLbl)
   }
 
@@ -723,8 +709,7 @@ object Dedup {
     // after deriving its slim repartitioned copy — that route reads the
     // index once, so the common incremental path never holds two
     // corpus-sized caches.
-    val index = buildNearDupIndex(corpus, idCol, textCol, bands, r, shingleN).persist()
-    Caches.register(index)
+    val index = Caches.persist(buildNearDupIndex(corpus, idCol, textCol, bands, r, shingleN))
     probeSurvivors(index, batch, idCol, textCol, threshold, bands, r, shingleN,
       batchBroadcastThreshold, nestedLoopWorkBudget)
   }
@@ -778,17 +763,14 @@ object Dedup {
                      nestedLoopWorkBudget: Long = 1L << 30): DataFrame = {
     val units = setUnits(shingleN)
     // one batch pass → slim (id, set_key); canonical batch duplicates probe once
-    val keyed = batch.select(col(idCol).as("__bid"), setKey(col(textCol), shingleN).as("__bkey"))
-      .persist()
-    Caches.register(keyed)
-    val bReps = keyed.groupBy("__bkey").agg(min(col("__bid")).as("__bid"))
+    val keyed = Caches.persist(
+      batch.select(col(idCol).as("__bid"), setKey(col(textCol), shingleN).as("__bkey")))
+    val bReps = Caches.persist(keyed.groupBy("__bkey").agg(min(col("__bid")).as("__bid"))
       .join(batch.select(col(idCol).as("__bid"), col(textCol).as("__btext")), "__bid")
       .select(col("__bkey"), sort_array(units(col("__btext"))).as("__bwords"))
       .withColumn("__bsz", size(col("__bwords")))
       .withColumn("__bbks",
-        bandKeys(NativeHash.minhashSignature(array_join(col("__bwords"), " "), bands * r), bands, r))
-      .persist()
-    Caches.register(bReps)
+        bandKeys(NativeHash.minhashSignature(array_join(col("__bwords"), " "), bands * r), bands, r)))
 
     // j ≥ t ⇒ min|set| ≥ t·max|set| — cheap int compare before anything else
     def sizePrune(sz: Column, bsz: Column): Column =
@@ -823,16 +805,15 @@ object Dedup {
         // repartition of the same 30k-row index → seconds). The repartition
         // itself is one linear pass over the slim projection.
         // this route reads the incoming index exactly ONCE — to build the
-        // slim repartitioned copy below. A caller-side persist (the
-        // incrementalSurvivors composition) only pays off on the banded
-        // route, which reads the index twice; release it here so the common
-        // incremental path holds ONE corpus-sized cache, not two.
-        if (index.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          index.unpersist(blocking = false)
+        // slim repartitioned copy below. The incrementalSurvivors pin only
+        // pays off on the banded route, which reads the index twice; release
+        // it here so the common incremental path holds ONE corpus-sized
+        // cache, not two. An index the caller pinned stays pinned: a caller
+        // probing one index batch after batch keeps its cache.
+        Caches.unpersist(index)
         val width = index.sparkSession.sparkContext.defaultParallelism
-        val slim = index.select(col("words"), col("sz"), col("bks"))
-          .repartition(width).persist()
-        Caches.register(slim)
+        val slim = Caches.persist(index.select(col("words"), col("sz"), col("bks"))
+          .repartition(width))
         // condition order (And short-circuits left-to-right): scalar size
         // prune first, then band overlap (20-long arrays), then the full
         // jaccard merge-scan on the survivors — overlap only downgrades
@@ -890,10 +871,8 @@ object Dedup {
     // forcing an extra full pass over the raw corpus. Layout-capped scans
     // rebalance first (r13, GraftSession.rebalanceScan — identity at real
     // scan widths) so the per-doc simhash runs on every core.
-    val fp = graft.GraftSession.rebalanceScan(docs)
-      .select(col(idCol).as("id"), NativeHash.simhash64(col(textCol)).as("sim"))
-      .persist()
-    Caches.register(fp)
+    val fp = Caches.persist(graft.GraftSession.rebalanceScan(docs)
+      .select(col(idCol).as("id"), NativeHash.simhash64(col(textCol)).as("sim")))
     val useBlocks = blockKeys.getOrElse(fp.count() > blockThreshold)
     val keyed =
       if (useBlocks) {
@@ -1000,10 +979,8 @@ object Dedup {
                            bruteThreshold: Long = 4096L): DataFrame = {
     // persisted: both routes read it twice or more (self-join / vector
     // attach) — the projection + L·k projections per vector compute once
-    val keyed = vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
-      graft.functions.VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks"))
-      .persist()
-    Caches.register(keyed)
+    val keyed = Caches.persist(vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
+      graft.functions.VectorFunctions.lshKeys(col(vecCol), nTables, planesPerTable).as("ks")))
     // route choice on the vector count (one control-plane scalar — it also
     // materializes the persisted keyed frame both routes consume). The
     // config gate L ≥ 2^k picks the COLLISION-DOMINATED regime: expected
@@ -1180,10 +1157,8 @@ object Dedup {
     val L = minTokens
     // slim gram occurrences; persisted — the election and the coverage
     // probe both read it, the corpus tokenizes/hashes exactly once
-    val ex = docs.select(col(idCol).as("id"),
-        posexplode(NativeHash.tokenGramHashes(col(textCol), L)).as(Seq("pos", "h")))
-      .persist()
-    Caches.register(ex)
+    val ex = Caches.persist(docs.select(col(idCol).as("id"),
+        posexplode(NativeHash.tokenGramHashes(col(textCol), L)).as(Seq("pos", "h"))))
     val dups = ex.groupBy("h")
       .agg(min(struct(col("id"), col("pos"))).as("win"), count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2)

@@ -65,12 +65,10 @@ object Fluency {
       .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // either frame is the single persisted scan both count tables and the
     // probe side consume; `g` carries the multiplicity k, `occ` is k ≡ 1
-    val g =
+    val g = Caches.persist(
       (if (preAggregate)
         occ.groupBy(col(idCol), col("w1"), col("w2")).agg(count(lit(1)).as("k"))
-      else occ.withColumn("k", lit(1L)))
-        .persist()
-    Caches.register(g)
+      else occ.withColumn("k", lit(1L))))
     val c2 = g.groupBy("w1", "w2").agg(sum("k").as("c2"))
     val c1 = g.groupBy("w1").agg(sum("k").as("c1"))
     g

@@ -82,8 +82,7 @@ object Graph {
                           maxRounds: Int = 50,
                           collectEdgeThreshold: Long = 1L << 22): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val dir0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
-    Caches.register(dir0)
+    val dir0 = Caches.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val (nEdges, bytesPerEdge) =
       if (dir0.schema.exists(_.dataType == org.apache.spark.sql.types.StringType)) {
         val r = dir0.agg(count(lit(1)),
@@ -180,14 +179,12 @@ object Graph {
     * [[connectedComponents]].
     */
   private def ccDistributedLabels(dir0: DataFrame, maxRounds: Int): DataFrame = {
-    val e = dir0.union(dir0.select(col("dst").as("src"), col("src").as("dst")))
+    val e = Caches.persist(dir0.union(dir0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       // one extra slim shuffle at build so HashPartitioning(src) is cached:
       // the per-round edge⋈labels equi-join then never re-exchanges the
       // (much larger) edge frame (guide §2.4; the r12 rep-words precedent)
-      .repartition(col("src"))
-      .persist()
-    Caches.register(e)
+      .repartition(col("src")))
     var labels = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("comp")).localCheckpoint()
     var changed = 1L
@@ -300,17 +297,15 @@ object Graph {
     // unpersisted, the caller's edge derivation (often a join + distinct)
     // re-executed up to 4x per run
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct()).persist()
-    Caches.register(e)
+    val e = Caches.persist(if (edgesDistinct) e0 else e0.distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // pre-partitioned on the per-round join key before persisting (r13, the
     // CC-route precedent): HashPartitioning(src) is cached with the frame,
     // so the per-iteration ew⋈ranks equi-join never re-exchanges the edge
     // frame — only the node-sized rank frame shuffles each round
-    val ew = e.join(deg, "src").repartition(col("src")).persist()
-    Caches.register(ew)
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct().persist()
-    Caches.register(nodes)
+    val ew = Caches.persist(e.join(deg, "src").repartition(col("src")))
+    val nodes = Caches.persist(
+      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
     // onRestart: the nodes that start with mass and take the restart term
     // (all of them, or the seeds; the optimizer folds `when(true, …)`)
     val seedSet = seeds.distinct
@@ -386,20 +381,18 @@ object Graph {
     * sum. Nothing graph-sized reaches the driver.
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
+    val und = Caches.persist(edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct().persist()
-    Caches.register(und)
-    val deg = und.select(col("u").as("node")).union(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg")).persist()
-    Caches.register(deg)
+      .filter(col("u") =!= col("v")).distinct())
+    val deg = Caches.persist(und.select(col("u").as("node")).union(und.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     // orient u→v when (deg(u), u) < (deg(v), v): a total order, so the
     // oriented graph is a DAG and every triangle closes exactly once
     val lowFirst = und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-    val oriented = lowFirst.select(
+    val oriented = Caches.persist(lowFirst.select(
         when(col("du") < col("dv") ||
              (col("du") === col("dv") && col("u") < col("v")), col("u"))
           .otherwise(col("v")).as("a"),
@@ -409,9 +402,7 @@ object Graph {
         least(col("du"), col("dv")).as("da"),
         greatest(struct(col("du").as("d"), col("u").as("n")),
                  struct(col("dv").as("d"), col("v").as("n")))
-          .getField("d").as("db"))
-      .persist()
-    Caches.register(oriented)
+          .getField("d").as("db")))
     // wedges at the apex a: unordered out-neighbor pairs (b, c) with
     // (db, b) < (dc, c) in the SAME total order, so the closing edge is
     // exactly the oriented b→c
@@ -424,9 +415,8 @@ object Graph {
     // persisted: the three-way role union below reads the closed triangles
     // once per role — without the barrier the wedge-closing join (the
     // dominant m^1.5 stage) would re-execute up to 3×
-    val tris = wedges.join(oriented.select(col("a").as("b"), col("b").as("c")),
-      Seq("b", "c")).persist()
-    Caches.register(tris)
+    val tris = Caches.persist(wedges.join(oriented.select(col("a").as("b"), col("b").as("c")),
+      Seq("b", "c")))
     val perNode = tris.select(col("a").as("node"))
       .union(tris.select(col("b").as("node")))
       .union(tris.select(col("c").as("node")))
@@ -468,9 +458,8 @@ object Graph {
     // pre-partitioned on src (r13): the per-round alive semi-join on src
     // then reuses the cached HashPartitioning instead of re-exchanging the
     // edge frame every peel round
-    val e = (if (symDistinct) sym else sym.distinct())
-      .repartition(col("src")).persist()
-    Caches.register(e)
+    val e = Caches.persist((if (symDistinct) sym else sym.distinct())
+      .repartition(col("src")))
     var alive = e.select(col("src").as("node")).distinct().localCheckpoint()
     // r13: ONE action per round — the survivor count rides the checkpoint
     // job as an observed metric and the previous round's count is
@@ -521,9 +510,8 @@ object Graph {
     val sym = dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
     // symDistinct / the src pre-partition: see [[kCore]] (r13) — every
     // frontier expansion joins on src
-    val e = (if (symDistinct) sym else sym.distinct())
-      .repartition(col("src")).persist()
-    Caches.register(e)
+    val e = Caches.persist((if (symDistinct) sym else sym.distinct())
+      .repartition(col("src")))
     // seed the round-0 frame from the literal seed list, NOT the
     // edge-incident node set: a seed with no edges is still at distance 0
     // ("every node reachable from the seed set" includes the seeds).
@@ -570,18 +558,15 @@ object Graph {
     // caller's edge derivation) from scratch
     val e0 =
       if (edgesDistinct) dir
-      else { val b = dir.distinct().persist(); Caches.register(b); b }
+      else Caches.persist(dir.distinct())
     // TWO pre-partitioned persisted copies of the slim edge frame (r13,
     // guide §2.4): the auth half-step joins on src, the hub half-step on
     // dst — one cached HashPartitioning each, so no half-step ever
     // re-exchanges edges; only the (smaller) score frames shuffle.
-    val eSrc = e0.repartition(col("src")).persist()
-    Caches.register(eSrc)
-    val eDst = e0.repartition(col("dst")).persist()
-    Caches.register(eDst)
-    val nodes = eSrc.select(col("src").as("node"))
-      .union(eSrc.select(col("dst").as("node"))).distinct().persist()
-    Caches.register(nodes)
+    val eSrc = Caches.persist(e0.repartition(col("src")))
+    val eDst = Caches.persist(e0.repartition(col("dst")))
+    val nodes = Caches.persist(eSrc.select(col("src").as("node"))
+      .union(eSrc.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     if (n == 0) return nodes.select(col("node"), lit(0L).as("hub"), lit(0L).as("auth"))
     var hub = nodes.select(col("node"), lit(scale / n).as("s")).localCheckpoint()

@@ -48,12 +48,10 @@ object Importance {
   def score(docs: DataFrame, idCol: String, textCol: String, isTarget: Column,
             buckets: Int = 512): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val toks = docs.select(col(idCol), isTarget.as("__tgt"),
+    val toks = Caches.persist(docs.select(col(idCol), isTarget.as("__tgt"),
         explode(TextFunctions.tokens(col(textCol))).as("__w"))
       .select(col(idCol), col("__tgt"),
-        Sampling.md5Bucket(col("__w"), buckets).as("b"))
-      .persist()
-    Caches.register(toks)
+        Sampling.md5Bucket(col("__w"), buckets).as("b")))
     val counts = toks.groupBy("b").agg(
       sum(when(col("__tgt"), 1L).otherwise(0L)).as("t_b"),
       count(lit(1)).as("c_b"))

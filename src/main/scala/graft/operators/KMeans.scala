@@ -86,8 +86,7 @@ object KMeans {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val spark = quantized.sparkSession
     import spark.implicits._
-    val q = quantized.persist()
-    Caches.register(q)
+    val q = Caches.persist(quantized)
     val seeds: Array[Array[Long]] = q.orderBy("id").limit(k)
       .select("qv").as[Array[Long]].collect()
     require(seeds.nonEmpty, "k-means: empty input")

@@ -41,12 +41,10 @@ object LabelProp {
   def propagate(edges: DataFrame, labels: DataFrame, idCol: String, labelCol: String,
                 isSeed: Column, rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one round")
-    val base = labels.select(col(idCol).as("vec_id"), col(labelCol).as("true_label"),
-        isSeed.as("is_seed"))
-      .persist() // read every round (pick join-back) + final report
-    Caches.register(base)
-    val e = edges.select("src_id", "neighbor_id").persist() // read every round
-    Caches.register(e)
+    // read every round (pick join-back) + final report
+    val base = Caches.persist(labels.select(col(idCol).as("vec_id"), col(labelCol).as("true_label"),
+        isSeed.as("is_seed")))
+    val e = Caches.persist(edges.select("src_id", "neighbor_id")) // read every round
     var cur = base.select(col("vec_id"),
       when(col("is_seed"), col("true_label")).otherwise(lit(null)).as("pred_label"))
     for (_ <- 1 to rounds) {
@@ -61,11 +59,10 @@ object LabelProp {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") === 1)
         .select(col("src_id").as("vec_id"), col("vote").as("picked"))
-      cur = base.join(pick, Seq("vec_id"), "left")
+      // next round's vote source (and the final join)
+      cur = Caches.persist(base.join(pick, Seq("vec_id"), "left")
         .select(col("vec_id"),
-          when(col("is_seed"), col("true_label")).otherwise(col("picked")).as("pred_label"))
-        .persist() // next round's vote source (and the final join)
-      Caches.register(cur)
+          when(col("is_seed"), col("true_label")).otherwise(col("picked")).as("pred_label")))
     }
     base.join(cur, "vec_id")
       .select("vec_id", "is_seed", "true_label", "pred_label")

@@ -143,11 +143,10 @@ object Layout {
     */
   private def quantized(df: DataFrame, dimA: String, dimB: String,
                         bits: Int): (DataFrame, DataFrame) = {
-    val dom = df.agg(
+    // 1 row, read by every layout branch and the final select
+    val dom = Caches.persist(df.agg(
       min(dimA).cast("long").as("a_lo"), max(dimA).cast("long").as("a_hi"),
-      min(dimB).cast("long").as("b_lo"), max(dimB).cast("long").as("b_hi"))
-      .persist() // 1 row, read by every layout branch and the final select
-    Caches.register(dom)
+      min(dimB).cast("long").as("b_lo"), max(dimB).cast("long").as("b_hi")))
     val scale = 1L << bits
     val wide = df.crossJoin(broadcast(dom))
       .withColumn("qa", expr(

@@ -29,12 +29,10 @@ object PairMine {
   def contrastivePairs(docs: DataFrame, idCol: String, textCol: String,
                        theta: Double, negBuckets: Int): DataFrame = {
     require(negBuckets >= 1, s"negBuckets must be >= 1, got $negBuckets")
-    val pos = Dedup.nearDupPairs(docs, idCol, textCol, theta)
-      .select(col("id_a"), col("id_b"), lit(1).as("label"))
-      .persist() // read twice (positive stream + negative anti-join) —
-                 // unpersisted, the whole banded candidate+verify pipeline
-                 // would run once per consumer
-    Caches.register(pos)
+    // read twice (positive stream + negative anti-join) — unpersisted, the
+    // whole banded candidate+verify pipeline would run once per consumer
+    val pos = Caches.persist(Dedup.nearDupPairs(docs, idCol, textCol, theta)
+      .select(col("id_a"), col("id_b"), lit(1).as("label")))
     val b = docs.select(col(idCol).as("id"),
         graft.functions.Sampling.md5Bucket(col(idCol), negBuckets).as("bucket"))
       .withColumn("rn", row_number().over(Window.partitionBy("bucket").orderBy("id")))

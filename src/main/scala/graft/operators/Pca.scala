@@ -47,10 +47,8 @@ object Pca {
     // identity at real scan widths): the quantize pass AND the dim²-per-row
     // outer-product explode below otherwise run on however few tasks the
     // file layout yields (1 on the single-row-group test tables)
-    val q = graft.GraftSession.rebalanceScan(vectors)
-      .select(col(idCol).as("id"), KMeans.quantize(col(vecCol)).as("qv"))
-      .persist()
-    Caches.register(q)
+    val q = Caches.persist(graft.GraftSession.rebalanceScan(vectors)
+      .select(col(idCol).as("id"), KMeans.quantize(col(vecCol)).as("qv")))
     val sums = q.select(posexplode(col("qv")).as(Seq("pos", "v")))
       .groupBy("pos").agg(sum("v").as("s"), count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))

@@ -102,10 +102,8 @@ object Profile {
       // null-safe key: NULL is a real distribution value here (a column
       // that is 30% null in both snapshots must report tv = 0, not 0.3);
       // a plain equi-join would orphan both null rows and double-count
-      val j = ca.join(cb, ca("va") <=> cb("vb"), "full_outer")
-        .select(coalesce(col("ca"), lit(0L)).as("ca"), coalesce(col("cb"), lit(0L)).as("cb"))
-        .persist()
-      Caches.register(j)
+      val j = Caches.persist(ca.join(cb, ca("va") <=> cb("vb"), "full_outer")
+        .select(coalesce(col("ca"), lit(0L)).as("ca"), coalesce(col("cb"), lit(0L)).as("cb")))
       val tot = j.agg(sum("ca").as("ta"), sum("cb").as("tb"))
       j.crossJoin(broadcast(tot))
         .agg(

@@ -26,21 +26,17 @@ object Rfm {
 
   def rfm(orders: DataFrame, custCol: String, tsCol: String,
           amountCol: String): DataFrame = {
-    val base = orders.select(col(custCol).as("cust"),
+    val base = Caches.persist(orders.select(col(custCol).as("cust"),
         unix_micros(col(tsCol).cast(TimestampType)).as("ts_us"),
         round(col(amountCol).cast("double") * lit(1000000.0)).cast("long").as("amt_u"))
       .groupBy("cust")
       .agg(max("ts_us").as("last_us"), count(lit(1)).as("frequency"),
-        sum("amt_u").as("monetary_u"))
-      .persist()
-    Caches.register(base)
+        sum("amt_u").as("monetary_u")))
 
-    val withR = base
+    val withR = Caches.persist(base
       .crossJoin(broadcast(base.agg(max("last_us").as("gmax"))))
       .select(col("cust"), expr("(gmax - last_us) div 86400000000").as("recency_days"),
-        col("frequency"), col("monetary_u"))
-      .persist()
-    Caches.register(withR)
+        col("frequency"), col("monetary_u")))
 
     val ps = Seq(0.2, 0.4, 0.6, 0.8)
     def cuts(dim: String, prefix: String): DataFrame =

@@ -43,7 +43,7 @@ object Scale {
     * arbitrary relative order, exactly like the window formulation.
     *
     * Costs one extra pass for the counts; the range-partitioned frame is
-    * persisted between the two jobs and registered with [[Caches]] —
+    * pinned through [[Caches]] between the two jobs —
     * long-running callers release via `Caches.release()`.
     */
   def globalRowNumber(df: DataFrame, orderCols: Seq[String], out: String = "row_idx",
@@ -54,11 +54,9 @@ object Scale {
     // monotonically_increasing_id over the range-sorted frame encodes
     // (partitionId << 33) | in-order-offset — a partition-local row number
     // with NO window and no second shuffle
-    val sorted = df.repartitionByRange(n, cols: _*)
+    val sorted = Caches.persist(df.repartitionByRange(n, cols: _*)
       .sortWithinPartitions(cols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .persist()
-    Caches.register(sorted)
+      .withColumn("__mid", monotonically_increasing_id()))
     val pid = shiftright(col("__mid"), 33)
     val localOff = col("__mid").bitwiseAND(lit((1L << 33) - 1))
     val counts = sorted.groupBy(pid.as("__pid")).count()
@@ -84,11 +82,9 @@ object Scale {
   private def rangeStamped(df: DataFrame, orderCols: Seq[String]): DataFrame = {
     val cols = orderCols.map(col)
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val stamped = df.repartitionByRange(n, cols: _*)
+    val stamped = Caches.persist(df.repartitionByRange(n, cols: _*)
       .sortWithinPartitions(cols: _*)
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .persist()
-    Caches.register(stamped)
+      .withColumn("__pid", spark_partition_id().cast("long")))
     stamped
   }
 

@@ -48,12 +48,8 @@ object Sketch {
     * narrow shuffle of at most m rows per task; output size is m rows
     * regardless of corpus size.
     */
-  def hllRegisters(df: DataFrame, key: String, p: Int = 12): DataFrame = {
-    val (bucket, rho) = hllProjection(col(key), p)
-    df.select(bucket.as("bucket"), rho.as("rho"))
-      .groupBy("bucket").agg(max("rho").as("rho"))
-      .withColumn("p", lit(p))
-  }
+  def hllRegisters(df: DataFrame, key: String, p: Int = 12): DataFrame =
+    hllRegistersBy(df, Nil, key, p)
 
   /** The (bucket, rho) projection behind [[hllRegisters]] — shared with the
     * streaming sketch ([[graft.streaming.StreamStats]]), so batch and
@@ -103,9 +99,7 @@ object Sketch {
     * estimates would be meaningless), and [[hllEstimate]] rejects the
     * mixed-precision table outright.
     */
-  def hllMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy("bucket", "p").agg(max("rho").as("rho"))
-      .select("bucket", "rho", "p")
+  def hllMerge(a: DataFrame, b: DataFrame): DataFrame = hllMergeBy(a, b, Nil)
 
   /** Distinct-count estimate from a register table: the standard HLL
     * harmonic-mean estimator with linear-counting small-range correction.
@@ -172,10 +166,13 @@ object Sketch {
     graft.GraftSession.rebalanceScan(df)
       .select(keep :+ col(key).cast("string").as("k"): _*)
       .select(keep ++ Seq(explode(sequence(lit(0), lit(d - 1))).as("i"), col("k")): _*)
-      .select(keep ++ Seq(col("i"),
-        NativeHash.md5Mod(concat(col("i").cast("string"), lit(":"), col("k")), w)
-          .cast("int").as("slot")): _*)
+      .select(keep ++ Seq(col("i"), cmsSlot(w)): _*)
   }
+
+  /** Counter slot of key `k` in row `i`: md5_number_lower(i ":" k) mod w. */
+  private def cmsSlot(w: Int): org.apache.spark.sql.Column =
+    NativeHash.md5Mod(concat(col("i").cast("string"), lit(":"), col("k")), w)
+      .cast("int").as("slot")
 
   /** Bloom-filter bit table for `key`: one (pos, k, m) row per SET bit,
     * k hash functions over an m-bit space. pos_i(key) =
@@ -293,9 +290,7 @@ object Sketch {
     val table = cmsTable(df, key, d, w)
     val probes = df.select(col(key).cast("string").as("k")).distinct()
       .select(col("k"), explode(sequence(lit(0), lit(d - 1))).as("i"))
-      .select(col("k"), col("i"),
-        NativeHash.md5Mod(concat(col("i").cast("string"), lit(":"), col("k")), w)
-          .cast("int").as("slot"))
+      .select(col("k"), col("i"), cmsSlot(w))
     probes.join(broadcast(table), Seq("i", "slot"))
       .groupBy("k").agg(min("cnt").as("est"))
   }

@@ -137,7 +137,8 @@ object TableLog {
     val era = when(year(col("o_orderdate")) <= 1996, 1L)
       .when(year(col("o_orderdate")) <= 1998, 2L)
       .otherwise(3L)
-    val files = orders
+    // commit-1 rows are re-read for the compaction's actions
+    val files = Caches.persist(orders
       .select(era.as("commit_id"),
         (col("o_orderkey") % 8).cast("long").as("b"),
         col("o_orderkey"),
@@ -148,9 +149,7 @@ object TableLog {
         max("o_orderkey").cast("long").as("max_key"))
       .select(col("commit_id"), lit("add").as("action"),
         (col("commit_id") * 100 + col("b")).as("file_id"),
-        col("n_rows"), col("bytes"), col("min_key"), col("max_key"))
-      .persist() // commit-1 rows are re-read for the compaction's actions
-    Caches.register(files)
+        col("n_rows"), col("bytes"), col("min_key"), col("max_key")))
     val c1 = files.filter(col("commit_id") === 1L)
     val removes = c1.select(lit(4L).as("commit_id"), lit("remove").as("action"),
       col("file_id"), col("n_rows"), col("bytes"), col("min_key"), col("max_key"))

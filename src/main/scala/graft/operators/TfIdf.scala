@@ -37,8 +37,7 @@ object TfIdf {
     // the whole tokenize+explode+agg chain for the df branch and the corpus
     // is scanned (and tokenized) twice; the persisted frame is the slim
     // distinct (doc, term, tf) triple, far smaller than the corpus
-    val tf = terms.groupBy(idCol, "term").agg(count(lit(1)).as("tf")).persist()
-    Caches.register(tf)
+    val tf = Caches.persist(terms.groupBy(idCol, "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("__n"))
     val scored = tf
@@ -73,8 +72,7 @@ object TfIdf {
       // array_distinct(wordShingles) HOF evaluates interpreted (same value
       // semantics — spec-pinned in NativeHashSpec)
       else graft.plans.NativeHash.shingleSet(col(textCol), shingleN)
-    val terms = docs.select(col(idCol), explode(units).as("term")).persist()
-    Caches.register(terms)
+    val terms = Caches.persist(docs.select(col(idCol), explode(units).as("term")))
     val df = terms.groupBy("term").agg(count(lit(1)).as("df"))
     terms.join(df, "term")
       .groupBy(idCol)
@@ -120,9 +118,8 @@ object TfIdf {
       .filter(array_contains(qlit, col("term")))
     // tf carries dl along (constant per doc) — saves a join back to a
     // doc-length frame; persisted because df re-aggregates it
-    val tf = toks.groupBy(col(idCol), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf")).persist()
-    Caches.register(tf)
+    val tf = Caches.persist(toks.groupBy(col(idCol), col("term"), col("dl"))
+      .agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = docs.select(TextFunctions.tokens(col(textCol)).as("__t"))
       .agg(count(lit(1)).as("n_docs"), sum(size(col("__t"))).as("tot_tokens"))
@@ -172,16 +169,14 @@ object TfIdf {
     require(k >= 1, s"k must be >= 1, got $k")
     val terms = docs.select(col(idCol).as("doc_id"),
       explode(TextFunctions.tokens(col(textCol))).as("term"))
-    val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")).persist()
-    Caches.register(tf)
+    val tf = Caches.persist(terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df0 = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val df = if (dfCap > 0) df0.filter(col("df") <= dfCap) else df0
     val n = docs.agg(count(lit(1)).as("__n"))
-    val w = tf.join(df, "term").crossJoin(broadcast(n))
+    // norms + both sides of the candidate join read it
+    val w = Caches.persist(tf.join(df, "term").crossJoin(broadcast(n))
       .select(col("doc_id"), col("term"), col("tf"),
-        expr("(__n * 1000000) div df").as("idf_u"))
-      .persist() // norms + both sides of the candidate join read it
-    Caches.register(w)
+        expr("(__n * 1000000) div df").as("idf_u")))
     // cast to decimal BEFORE the multiply: a long tf*tf*idf_u product can
     // wrap silently on a pathological corpus (DuckDB's HUGEINT multiplies
     // exactly; Spark's long wraps) — decimal(38,0) arithmetic is exact

@@ -72,11 +72,9 @@ object Winnow {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     // distinct hash per doc: a hash selected at several positions counts
     // once toward the pair, like an inverted-index posting
-    val fp = fingerprints(docs, idCol, textCol, k, w)
+    val fp = Caches.persist(fingerprints(docs, idCol, textCol, k, w)
       .select(col(idCol).as("id"), col("gram_hash").as("h"))
-      .distinct()
-      .persist()
-    Caches.register(fp)
+      .distinct())
     val kept = fp.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
       .select("h")

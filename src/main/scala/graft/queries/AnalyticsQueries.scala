@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.GraftSession
 import graft.GraftSession.table
+import graft.operators.Caches
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -525,16 +526,15 @@ object AnalyticsQueries {
     */
   def qTimeToConvert(s: SparkSession, dir: String): DataFrame = {
     val raw = table(s, dir, "events")
-    val lat = raw.select(col("user_id"), GraftSession.eventTsMs(raw).as("ts_ms"),
+    // read twice: histogram + count (both key-sized)
+    val lat = Caches.persist(raw.select(col("user_id"), GraftSession.eventTsMs(raw).as("ts_ms"),
         col("event_type"), col("value"))
       .groupBy("user_id")
       .agg(min(when(col("event_type") === "signup", col("ts_ms"))).as("t0"),
         min(when(col("event_type") === "purchase" && col("value") >= 200.0,
           col("ts_ms"))).as("t1"))
       .filter(col("t0").isNotNull && col("t1").isNotNull && col("t1") >= col("t0"))
-      .select(lit("all").as("grp"), (col("t1") - col("t0")).as("latency_ms"))
-      .persist() // read twice: histogram + count (both key-sized)
-    graft.operators.Caches.register(lat)
+      .select(lit("all").as("grp"), (col("t1") - col("t0")).as("latency_ms")))
     graft.operators.Curation.lengthPercentiles(lat, "grp", "latency_ms")
       .crossJoin(lat.agg(count(lit(1)).as("n_users")))
       .select(col("n_users"), col("p50").as("p50_ms"), col("p90").as("p90_ms"),
@@ -573,9 +573,8 @@ object AnalyticsQueries {
     val ev = raw.select(col("user_id"), GraftSession.eventTsMs(raw).as("ts_ms"),
         col("event_type"), col("value"))
       .withColumn("week", expr("ts_ms div 604800000"))
-    val cohort = ev.groupBy("user_id").agg(min("week").as("cohort_week"))
-      .persist() // read twice: purchase join + cohort sizes
-    graft.operators.Caches.register(cohort)
+    // read twice: purchase join + cohort sizes
+    val cohort = Caches.persist(ev.groupBy("user_id").agg(min("week").as("cohort_week")))
     val sizes = cohort.groupBy("cohort_week").agg(count(lit(1)).as("cohort_users"))
     val w = Window.partitionBy("cohort_week").orderBy("weeks_since")
     ev.filter(col("event_type") === "purchase")
@@ -904,10 +903,9 @@ object AnalyticsQueries {
     * slim keys and the order total broadcasts as a 1-row frame.
     */
   def qBasketPairs(s: SparkSession, dir: String): DataFrame = {
-    val li = table(s, dir, "lineitem")
-      .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk")).distinct()
-      .persist() // read three times: both join sides + frequencies
-    graft.operators.Caches.register(li)
+    // read three times: both join sides + frequencies
+    val li = Caches.persist(table(s, dir, "lineitem")
+      .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk")).distinct())
     val co = li.join(li.select(col("okey"), col("pk").as("pk2")), Seq("okey"))
       .filter(col("pk") < col("pk2"))
       .groupBy("pk", "pk2").agg(count(lit(1)).as("n_co"))
@@ -949,12 +947,11 @@ object AnalyticsQueries {
     * daily aggregation runs on the \|days\| control-plane frame.
     */
   def qForecastBaseline(s: SparkSession, dir: String): DataFrame = {
-    val daily = table(s, dir, "orders")
+    // tiny; read three times (base + two shifted copies)
+    val daily = Caches.persist(table(s, dir, "orders")
       .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000").as("day"),
         round(col("o_totalprice") * lit(1000000.0)).cast("long").as("rev_u"))
-      .groupBy("day").agg(sum("rev_u").as("y"))
-      .persist() // tiny; read three times (base + two shifted copies)
-    graft.operators.Caches.register(daily)
+      .groupBy("day").agg(sum("rev_u").as("y")))
     def backtest(shift: Int, tag: String) =
       daily.join(daily.select((col("day") + shift).as("day"), col("y").as("y_hat")), "day")
         .agg(count(lit(1)).as(s"n_$tag"),
@@ -1210,15 +1207,14 @@ object AnalyticsQueries {
   def qMarkovTransitions(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
     val raw = table(s, dir, "events")
-    val trans = raw
+    // read twice: matrix cells + row totals (cache barrier)
+    val trans = Caches.persist(raw
       .select(col("event_id"), col("user_id"), GraftSession.eventTsMs(raw).as("ts_ms"),
         col("event_type"))
       .withColumn("prev_type", lag("event_type", 1).over(byUser))
       .filter(col("prev_type").isNotNull)
       .groupBy(col("prev_type"), col("event_type").as("next_type"))
-      .agg(count(lit(1)).as("n"))
-      .persist() // read twice: matrix cells + row totals (cache barrier)
-    graft.operators.Caches.register(trans)
+      .agg(count(lit(1)).as("n")))
     val totals = trans.groupBy("prev_type").agg(sum("n").as("__row_n"))
     trans.join(broadcast(totals), "prev_type")
       .select(col("prev_type"), col("next_type"), col("n"),
@@ -1446,13 +1442,11 @@ object AnalyticsQueries {
     * o⋈l ran twice).
     */
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val edges = table(s, dir, "orders").join(table(s, dir, "lineitem"),
+    val edges = Caches.persist(table(s, dir, "orders").join(table(s, dir, "lineitem"),
         col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).cast("long").as("src"),
         (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-      .distinct()
-      .persist()
-    graft.operators.Caches.register(edges)
+      .distinct())
     edges
   }
 
@@ -1632,15 +1626,14 @@ object AnalyticsQueries {
   def qKcore(s: SparkSession, dir: String): DataFrame = {
     // LONG node encoding (r13, see [[tradeNode]]): within-core degrees are
     // isomorphism-invariant, so decoding after the peel is value-identical
-    val edges = table(s, dir, "orders").join(table(s, dir, "lineitem"),
+    // both symmetrization legs read it (r12: o⋈l+agg ran twice)
+    val edges = Caches.persist(table(s, dir, "orders").join(table(s, dir, "lineitem"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"), col("l_suppkey"))
       .agg(countDistinct(col("o_orderkey")).as("no"))
       .filter(col("no") >= 2)
       .select((col("o_custkey") * 2).cast("long").as("src"),
-        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-      .persist() // both symmetrization legs read it (r12: o⋈l+agg ran twice)
-    graft.operators.Caches.register(edges)
+        (col("l_suppkey") * 2 + 1).cast("long").as("dst")))
     // symDistinct (r13): the aggregation grain makes `edges` distinct and
     // the graph is bipartite (even/odd longs), so the symmetrized union is
     // provably duplicate-free
@@ -2338,12 +2331,11 @@ object AnalyticsQueries {
     * bounds come from the same 1-row agg pattern as [[qZorderLayout]].
     */
   def qGapFill(s: SparkSession, dir: String): DataFrame = {
-    val daily = table(s, dir, "orders")
+    // read by the 1-row domain agg AND the spine join
+    val daily = Caches.persist(table(s, dir, "orders")
       .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000").as("day"),
         round(col("o_totalprice") * lit(1000000.0)).cast("long").as("rev_u"))
-      .groupBy("day").agg(sum("rev_u").as("revenue_u"))
-      .persist() // read by the 1-row domain agg AND the spine join
-    graft.operators.Caches.register(daily)
+      .groupBy("day").agg(sum("rev_u").as("revenue_u")))
     val spine = daily.agg(min("day").as("d0"), max("day").as("d1"))
       .select(explode(sequence(col("d0"), col("d1"))).as("day"))
     val w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2594,9 +2586,8 @@ object AnalyticsQueries {
       .groupBy("o_custkey")
       .agg(sum((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")).as("rev"))
       .withColumn("negrev", -col("rev"))
-    val cum = graft.operators.Scale.runningSum(rev, Seq("negrev", "o_custkey"), "rev", "cum")
-      .persist()
-    graft.operators.Caches.register(cum)
+    val cum = Caches.persist(
+      graft.operators.Scale.runningSum(rev, Seq("negrev", "o_custkey"), "rev", "cum"))
     val tot = cum.agg(sum("rev").cast("decimal(38,0)").as("tot"),
       count(lit(1)).as("n_cust"))
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
@@ -2649,12 +2640,10 @@ object AnalyticsQueries {
   def qSmallQtyRevenue(s: SparkSession, dir: String): DataFrame = {
     val pb = table(s, dir, "part").filter(col("p_brand") === "Brand#23")
       .select(col("p_partkey"))
-    val li = table(s, dir, "lineitem")
+    val li = Caches.persist(table(s, dir, "lineitem")
       .join(broadcast(pb), col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-        (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long").as("cents"))
-      .persist()
-    graft.operators.Caches.register(li)
+        (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long").as("cents")))
     val stats = li.groupBy("l_partkey")
       .agg(count(lit(1)).as("cnt"), sum("qty").as("sumq"))
     li.join(stats, "l_partkey")
@@ -2770,8 +2759,7 @@ object AnalyticsQueries {
       .select((col("p_partkey") + 10000000L).as("rid"),
         concat(col("p_name").substr(lit(1), pos0),
           col("p_name").substr(pos0 + lit(2), length(col("p_name")))).as("name"))
-    val records = base.unionByName(dupes).persist()
-    graft.operators.Caches.register(records)
+    val records = Caches.persist(base.unionByName(dupes))
     val names = records.select(col("name")).distinct()
     val v = names.withColumn("variant",
       explode(graft.operators.FuzzyLink.deletionVariants(col("name"))))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.GraftSession.table
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Ann, Curation, Dedup, Graph, Winnow}
+import graft.operators.{Ann, Caches, Curation, Dedup, Graph, Winnow}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -166,12 +166,10 @@ object LlmQueries {
     val minCols = (0 until bands * r).map(i => min(element_at(col("hs"), i + 1)).as(s"m$i"))
     // persisted: BOTH signature legs of the cross join read it — unpersisted
     // the vocabulary join + 24-min agg executed twice per run
-    val sigG = words.join(dict, "w")
+    val sigG = Caches.persist(words.join(dict, "w")
       .groupBy("g")
       .agg(minCols.head, minCols.tail: _*)
-      .select(col("g"), array((0 until bands * r).map(i => col(s"m$i")): _*).as("sig"))
-      .persist()
-    graft.operators.Caches.register(sigG)
+      .select(col("g"), array((0 until bands * r).map(i => col(s"m$i")): _*).as("sig")))
     val bandHit = (0 until bands).map { b =>
       element_at(col("sig_a"), b * 2 + 1) === element_at(col("sig_b"), b * 2 + 1) &&
         element_at(col("sig_a"), b * 2 + 2) === element_at(col("sig_b"), b * 2 + 2)
@@ -254,14 +252,12 @@ object LlmQueries {
     // every t) — so the doc-pair expansion never materializes. Values are
     // unchanged; the oracle still replays the doc-grain all-pairs scan.
     val sub = Dedup.prefixSub(table(s, dir, "documents"), "doc_id", "text", 7, 10)
-    val wPairs = sub.repPairs
+    val wPairs = Caches.persist(sub.repPairs
       .join(sub.skel.select(col("g").as("id_a"), col("n").as("na")), "id_a")
       .join(sub.skel.select(col("g").as("id_b"), col("n").as("nb")), "id_b")
       .select(col("jaccard"), (col("na") * col("nb")).as("w"))
       .unionByName(sub.skel.filter(col("n") >= 2)
-        .select(lit(1.0).as("jaccard"), expr("(n * (n - 1)) DIV 2").as("w")))
-      .persist()
-    graft.operators.Caches.register(wPairs)
+        .select(lit(1.0).as("jaccard"), expr("(n * (n - 1)) DIV 2").as("w"))))
     Seq(0.7, 0.8, 0.9).map { t =>
       wPairs.agg(lit(t).as("threshold"),
         coalesce(sum(when(col("jaccard") >= t, col("w"))), lit(0L)).as("n_pairs"))
@@ -313,9 +309,8 @@ object LlmQueries {
     // per-query relabel joins this query used to pay (the r9 "longs collect
     // ~6× cheaper than md5 strings" fix) now live at the substrate source
     val sub = Dedup.prefixSub(docs, "doc_id", "text", 7, 10)
-    val rp = sub.repPairs
-      .select(col("id_a").as("ga"), col("id_b").as("gb"), col("jaccard")).persist()
-    graft.operators.Caches.register(rp)
+    val rp = Caches.persist(sub.repPairs
+      .select(col("id_a").as("ga"), col("id_b").as("gb"), col("jaccard")))
     // r13 (§5 fewer driver round-trips): the rep-pair set is SET-GRAIN
     // bounded, and all three thresholds need only components/touched
     // counts over subsets of it — under the byte-aware budget, ONE collect
@@ -395,15 +390,13 @@ object LlmQueries {
       size(TF.tokens(col("text"))).cast("long").as("y"),
       size(TF.wordSet(col("text"))).cast("long").as("z"))
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(20,0)")
-    val m = d.agg(
+    val m = Caches.persist(d.agg(
       count(lit(1)).cast("decimal(20,0)").as("n"),
       sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"), sum(dec(col("z"))).as("sz"),
       sum(dec(col("x") * col("x"))).as("qx"), sum(dec(col("y") * col("y"))).as("qy"),
       sum(dec(col("z") * col("z"))).as("qz"),
       sum(dec(col("x") * col("y"))).as("pxy"), sum(dec(col("x") * col("z"))).as("pxz"),
-      sum(dec(col("y") * col("z"))).as("pyz"))
-      .persist()
-    graft.operators.Caches.register(m)
+      sum(dec(col("y") * col("z"))).as("pyz")))
     def corr(name: String, sa: String, sb: String, qa: String, qb: String, p: String) =
       m.select(lit(name).as("pair"),
         ((col("n") * col(p) - col(sa) * col(sb)).cast("double") /
@@ -452,11 +445,9 @@ object LlmQueries {
   def qLangMismatch(s: SparkSession, dir: String): DataFrame = {
     // layout-capped scan rebalanced (r13): five marker regexes per doc ran
     // on however few tasks the file layout yields — identity at real widths
-    val d = graft.GraftSession.rebalanceScan(table(s, dir, "documents"))
+    val d = Caches.persist(graft.GraftSession.rebalanceScan(table(s, dir, "documents"))
       .select(col("lang").as("labeled_lang"), TF.langId(col("text")).as("detected_lang"))
-      .groupBy("labeled_lang", "detected_lang").agg(count(lit(1)).as("n"))
-      .persist()
-    graft.operators.Caches.register(d)
+      .groupBy("labeled_lang", "detected_lang").agg(count(lit(1)).as("n")))
     val tot = d.groupBy("labeled_lang").agg(sum("n").as("t"))
     d.join(tot, "labeled_lang")
       .select(col("labeled_lang"), col("detected_lang"), col("n"),
@@ -1667,7 +1658,7 @@ object LlmQueries {
   def ivfCentroidFixture(dir: String): String =
     new java.io.File(s"target/verify_fixtures/ivf_centroids_n16i1_${dataTag(dir)}.parquet").getAbsolutePath
 
-  // The dataset qAnnIvf last pinned centroids for. Verify/DumpQuery dump the
+  // The dataset qAnnIvf last pinned centroids for. Verify dumps the
   // oracle SQL AFTER running the query in the same JVM, so the dumped SQL
   // always reads the fixture that run wrote.
   private val lastIvfDir = new java.util.concurrent.atomic.AtomicReference[String](".")
@@ -4851,13 +4842,12 @@ object LlmQueries {
     * value-buffering aggregate, ~\|labels × distinct norms\| rows.
     */
   def qEmbedNormAudit(s: SparkSession, dir: String): DataFrame = {
-    val norms = table(s, dir, "embeddings")
+    // percentile histogram + the count/zero agg both read it
+    val norms = Caches.persist(table(s, dir, "embeddings")
       .select(col("label"),
         floor(sqrt(aggregate(col("embedding"), lit(0.0),
           (a, x) => a + x.cast("double") * x.cast("double"))) * lit(1000000.0))
-          .cast("long").as("norm_u"))
-      .persist() // percentile histogram + the count/zero agg both read it
-    graft.operators.Caches.register(norms)
+          .cast("long").as("norm_u")))
     val pct = graft.operators.Curation.lengthPercentiles(norms, "label", "norm_u")
     val stats = norms.groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
@@ -4908,10 +4898,9 @@ object LlmQueries {
     * reused by the spec on planted tables.
     */
   def chi2Cells(df: DataFrame, rowCol: String, colCol: String): DataFrame = {
-    val cells = df
-      .groupBy(rowCol, colCol).agg(count(lit(1)).as("obs"))
-      .persist() // margins ×2 + the final select all read it
-    graft.operators.Caches.register(cells)
+    // margins ×2 + the final select all read it
+    val cells = Caches.persist(df
+      .groupBy(rowCol, colCol).agg(count(lit(1)).as("obs")))
     val rowm = cells.groupBy(rowCol).agg(sum("obs").as("row_n"))
     val colm = cells.groupBy(colCol).agg(sum("obs").as("col_n"))
     val tot = cells.agg(sum("obs").as("n"))
@@ -5080,9 +5069,8 @@ object LlmQueries {
   def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = table(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 5)
-    val truth = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
-      .persist() // |Q|·k rows, read once per evaluated posture
-    graft.operators.Caches.register(truth)
+    // |Q|·k rows, read once per evaluated posture
+    val truth = Caches.persist(Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10))
     def leg(nTables: Int, name: String) =
       Ann.recallAtK(truth,
           Ann.lshTopK(q, emb, "vec_id", "embedding", k = 10,
@@ -5122,8 +5110,7 @@ object LlmQueries {
   def qAnnRecallIvf(s: SparkSession, dir: String): DataFrame = {
     val emb = table(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 5)
-    val truth = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10).persist()
-    graft.operators.Caches.register(truth)
+    val truth = Caches.persist(Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10))
     val fixture = ivfCentroidFixture(dir)
     lastIvfDir.set(dir)
     pinFixtureOnce(() => Ann.trainIvfCentroids(emb, "vec_id", "embedding",
@@ -5375,16 +5362,15 @@ object LlmQueries {
     val ds = graft.functions.Sampling.split(col("id"), trainPct = 80, valPct = 10)
     val cs = graft.functions.Sampling.split(col("cluster_id"), trainPct = 80, valPct = 10)
     // per-set split vectors (doc-hash and cluster-hash policies side by side)
-    val vec = keyed.join(setLbl, "set_key")
+    // read by intra-set, rep-pair, and split-size aggregates
+    val vec = Caches.persist(keyed.join(setLbl, "set_key")
       .select(col("set_key"), ds.as("dsp"), cs.as("csp"))
       .groupBy("set_key")
       .agg(count(lit(1)).as("n"),
         flag(col("dsp"), "train").as("d_tr"), flag(col("dsp"), "val").as("d_va"),
         flag(col("dsp"), "test").as("d_te"),
         flag(col("csp"), "train").as("c_tr"), flag(col("csp"), "val").as("c_va"),
-        flag(col("csp"), "test").as("c_te"))
-      .persist() // read by intra-set, rep-pair, and split-size aggregates
-    graft.operators.Caches.register(vec)
+        flag(col("csp"), "test").as("c_te")))
     // (n² − Σ_s n_s²) is always EVEN, so per-set DIV 2 is exact; all the
     // arithmetic stays in longs (a double `/` would round above 2^53)
     def intraOf(p: String) = expr(
@@ -5457,14 +5443,13 @@ object LlmQueries {
     * + a ≤64-row group-by; the global max rides a broadcast 1-row agg.
     */
   def qPadWaste(s: SparkSession, dir: String): DataFrame = {
-    val d = table(s, dir, "documents")
+    // read by the bucket agg AND the global-max agg
+    val d = Caches.persist(table(s, dir, "documents")
       .select(TF.tokenCountBpe(col("text")).cast("long").as("len"))
       .filter(col("len") > 0)
       .select(col("len"),
         when(col("len") <= 1, lit(1L))
-          .otherwise(expr("shiftleft(CAST(1 AS BIGINT), length(bin(len - 1)))")).as("cap"))
-      .persist() // read by the bucket agg AND the global-max agg
-    graft.operators.Caches.register(d)
+          .otherwise(expr("shiftleft(CAST(1 AS BIGINT), length(bin(len - 1)))")).as("cap")))
     d.groupBy("cap")
       .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("tokens"))
       .crossJoin(broadcast(d.agg(max(col("len")).as("max_len"))))
@@ -5509,11 +5494,9 @@ object LlmQueries {
     // persist the slim (doc_id, len) frame: BOTH strategies consume it, and
     // each globalRowNumber pass otherwise re-runs the tokenizer regex over
     // the full corpus twice more (range-boundary sampling + the shuffle)
-    val d = table(s, dir, "documents")
+    val d = Caches.persist(table(s, dir, "documents")
       .select(col("doc_id"), TF.tokenCountBpe(col("text")).cast("long").as("len"))
-      .filter(col("len") > 0)
-      .persist()
-    graft.operators.Caches.register(d)
+      .filter(col("len") > 0))
     def packed(df: DataFrame, strategy: String): DataFrame =
       df.withColumn("batch_id", expr(s"(rn - 1) div $B"))
         .groupBy("batch_id")

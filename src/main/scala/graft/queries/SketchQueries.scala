@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.GraftSession.table
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Fluency, Sketch}
+import graft.operators.{Caches, Fluency, Sketch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,8 +111,7 @@ object SketchQueries {
     // persisted: the self inner product reads the events sketch on BOTH
     // join sides — without the barrier the d×|events| hash pass runs twice
     // (r12; the sketch is ≤ d·w rows, control-plane sized)
-    val evCms = cms(ev, "user_id").persist()
-    graft.operators.Caches.register(evCms)
+    val evCms = Caches.persist(cms(ev, "user_id"))
     report("orders_lineitem",
         inner(cms(ords, "o_orderkey"), cms(li, "l_orderkey")),
         exact(ords, "o_orderkey", li, "l_orderkey"))
@@ -240,10 +239,8 @@ object SketchQueries {
     // by its own estimate collect and by the merged-union estimate — and
     // the expensive part of a 256-row register frame is the full lineitem
     // md5 pass behind it, which unpersisted ran 2× per slice (4 scans/run)
-    val ra = Sketch.hllRegisters(a, "pk", p = 8).persist()
-    val rb = Sketch.hllRegisters(b, "pk", p = 8).persist()
-    graft.operators.Caches.register(ra)
-    graft.operators.Caches.register(rb)
+    val ra = Caches.persist(Sketch.hllRegisters(a, "pk", p = 8))
+    val rb = Caches.persist(Sketch.hllRegisters(b, "pk", p = 8))
     val ru = Sketch.hllMerge(ra, rb)
     val (ea, eb, eu) =
       (Sketch.hllEstimate(ra, 8), Sketch.hllEstimate(rb, 8), Sketch.hllEstimate(ru, 8))

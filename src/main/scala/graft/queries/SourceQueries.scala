@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.GraftSession.table
 import graft.functions.Cleaners
-import graft.operators.{MultiSourceMerge, SubSourceFeed}
+import graft.operators.{Caches, MultiSourceMerge, SubSourceFeed}
 import graft.sources.{CsvSource, MorrisXmlSource, RestJsonSource}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -337,12 +337,10 @@ object SourceQueries {
     * read it); everything after is class-grain, never row-grain.
     */
   def qKanon(s: SparkSession, dir: String): DataFrame = {
-    val g = table(s, dir, "customer")
+    val g = Caches.persist(table(s, dir, "customer")
       .groupBy(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / 1000.0).cast("long").as("bal_bucket"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
-    graft.operators.Caches.register(g)
+      .agg(count(lit(1)).as("n")))
     Seq(2, 5, 10).map { k =>
       g.agg(
         lit(k).as("k"),

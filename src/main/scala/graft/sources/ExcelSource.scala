@@ -101,8 +101,7 @@ object ExcelSource {
   def toTableDF(grid: DataFrame, range: Option[String]): DataFrame = {
     // the probe action and the caller's own action both consume the sliced
     // grid — persist so the (possibly expensive) upstream computes once
-    val sliced = selectRange(grid, range).persist()
-    graft.operators.Caches.register(sliced)
+    val sliced = graft.operators.Caches.persist(selectRange(grid, range))
     // ONE probe job for header row, header position and rectangularized
     // width (min_by picks the first row; three scans would triple the
     // upstream cost)

@@ -143,8 +143,7 @@ abstract class AdmissionGate private[streaming] (initialIndex: DataFrame,
     * self-collide).
     */
   def admit(batch: DataFrame): DataFrame = synchronized {
-    val survivors = probe(index, batch).persist()
-    Caches.register(survivors)
+    val survivors = Caches.persist(probe(index, batch))
     val newRows = indexRows(survivors)
       .localCheckpoint(true) // computed once: the append write AND the union both read it
     persistDir.foreach(dir => newRows.write.mode("append").parquet(dir))

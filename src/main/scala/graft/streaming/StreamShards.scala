@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Mix
+import graft.operators.{Caches, Mix}
 import org.apache.spark.sql.DataFrame
 
 /** Continuous token-budget shard layout over a stream — the streaming
@@ -45,9 +45,8 @@ object StreamShards {
           val prior = state.filter(_._1 < batchId)
           if (prior.isEmpty) 0L else prior.maxBy(_._1)._2._2
       }
-      val assigned = Mix.shardAssign(batch, idCol, textCol, shardTokens,
-          prioBuckets, startOffset = start)
-        .persist()
+      val assigned = Caches.persist(Mix.shardAssign(batch, idCol, textCol, shardTokens,
+          prioBuckets, startOffset = start))
       try {
         // end offset from the assignment itself (cum_tokens is already
         // start-shifted); empty batches advance nothing
@@ -59,7 +58,7 @@ object StreamShards {
         assigned.write.mode("append")
           .partitionBy("shard_id").parquet(outDir)
         writeState(stateDir, state + (batchId -> (start, end)))
-      } finally assigned.unpersist()
+      } finally Caches.unpersist(assigned)
   }
 
   // ---- offset checkpoint: batchId -> (startOffset, endOffset) ------------

@@ -172,13 +172,12 @@ class GraphSpec extends SparkSpec {
 
   test("dropZeroRanks gate equals filter(rank > 0) on the real trade graph (r13 route equality)") {
     import org.apache.spark.sql.functions._
-    val edges = GraftSession.table(spark, sfDir, "orders")
+    val edges = graft.operators.Caches.persist(GraftSession.table(spark, sfDir, "orders")
       .join(GraftSession.table(spark, sfDir, "lineitem"),
         col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).cast("long").as("c"),
         (col("l_suppkey") * 2 + 1).cast("long").as("ss"))
-      .distinct().persist()
-    graft.operators.Caches.register(edges)
+      .distinct())
     val sym = edges.select(col("c").as("src"), col("ss").as("dst"))
       .union(edges.select(col("ss").as("src"), col("c").as("dst")))
     val seeds: Seq[Any] = Seq(2L, 4L, 6L, 8L, 10L)

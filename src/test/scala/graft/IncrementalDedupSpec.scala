@@ -1,8 +1,9 @@
 package graft
 
 import graft.operators.{Caches, Dedup}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{CachedRelations, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Incremental (batch-vs-corpus) dedup: constructive ground truth — the
   * corpus is base docs; the batch mixes exact copies (jaccard 1.0), near
@@ -115,6 +116,30 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(Dedup.lastProbeRoute == "banded")
     Caches.release()
     assert(a == b && a.size == 2 * n)
+  }
+
+  test("a nested probe keeps the index its caller pinned cached") {
+    val idx = Dedup.buildNearDupIndex(corpus(), "id", "text")
+    idx.persist()
+    idx.count()
+    try {
+      Dedup.probeSurvivors(idx, batch().filter(col("id") < 10 * n + 10), "id", "text",
+          threshold = 0.8).collect()
+      assert(Dedup.lastProbeRoute == "nested")
+      assert(idx.storageLevel != StorageLevel.NONE, "probe unpinned the caller's index")
+    } finally { idx.unpersist(); Caches.release() }
+  }
+
+  test("nested incremental route holds one corpus-sized cache: the index pin is released early") {
+    Caches.release()
+    val before = CachedRelations.count(spark)
+    Dedup.incrementalSurvivors(corpus(), batch(), "id", "text", threshold = 0.8).collect()
+    assert(Dedup.lastProbeRoute == "nested")
+    // keyed batch, batch reps and the slim repartitioned index copy; the
+    // full index pin is gone
+    assert(CachedRelations.count(spark) - before == 3)
+    Caches.release()
+    assert(CachedRelations.count(spark) == before)
   }
 
   test("result is stable under repartitioning both sides") {
