@@ -23,6 +23,9 @@ object Caches {
     df
   }
 
+  /** Whether graft pinned `df` through [[persist]] and has not released it. */
+  def pinned(df: DataFrame): Boolean = live.contains(df)
+
   /** Early release of one frame: unpins `df` only if graft pinned it
     * through [[persist]]; a frame graft did not pin is left as it is.
     */

@@ -107,12 +107,30 @@ object Dedup {
     val keys = Caches.persist(docs.select(
       col(idCol).as("id"),
       bandKeys(NativeHash.minhashSignature(col(textCol), bands * r), bands, r).as("bks")))
-    val sigs = keys.select(col("id"), explode(col("bks")).as("bk"))
-    sigs.as("a")
-      .join(sigs.as("b"), col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
+    keyPairs(keys.select(col("id"), explode(col("bks")).as("bk")), "id", "bk")(lit(true))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
   }
+
+  /** The one broadcast all-pairs scan of `df` against itself: the probe
+    * side streams repartitioned to the session parallelism (so the O(n²)
+    * condition evaluations spread over every core even off a
+    * few-partition cached frame) aliased `a`, the build side broadcasts
+    * aliased `b`, and the join keeps `a.id < b.id && cond`. Callers pass
+    * the slim projection the condition and their select read.
+    */
+  private[graft] def allPairs(df: DataFrame, id: String)(cond: Column): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism).as("a")
+      .join(broadcast(df.as("b")), col(s"a.$id") < col(s"b.$id") && cond)
+
+  /** The one key self-join of `df`: rows pair when they share `key`, with
+    * `a.id < b.id && cond` (sides aliased `a` and `b`). Callers keep their
+    * own select and `distinct` — a pair sharing several keys comes out
+    * once per shared key.
+    */
+  private[graft] def keyPairs(df: DataFrame, id: String, key: String)(cond: Column): DataFrame =
+    df.as("a").join(df.as("b"),
+      col(s"a.$key") === col(s"b.$key") && col(s"a.$id") < col(s"b.$id") && cond)
 
   /** A corpus canonicalized to its DISTINCT word (or shingle) sets plus the
     * verified near-dup rep-pair graph between them — the one substrate of
@@ -270,24 +288,19 @@ object Dedup {
       // back only for the verify step.
       val nReps = groups.count() // also materializes the persisted frame
       val broadcastable = nReps <= broadcastThreshold
+      Route.record(docs.sparkSession, "minhash", if (broadcastable) "broadcast" else "banded")
       val candidates: DataFrame =
         if (broadcastable) {
           val sets = groups.select(col("g"), size(col("words")).as("sz"),
             bandKeys(NativeHash.minhashSignature(array_join(col("words"), " "), bands * r),
               bands, r).as("sig"))
-          // probe side repartitioned so the O(nReps²) pair scan parallelizes
-          // across all cores (the persisted groups frame is few-partition)
-          val a = sets.select(col("g").as("id_a"), col("sz").as("sz_a"), col("sig").as("sig_a"))
-            .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-          val b = sets.select(col("g").as("id_b"), col("sz").as("sz_b"), col("sig").as("sig_b"))
-          a.join(broadcast(b),
-              col("id_a") < col("id_b") &&
+          allPairs(sets, "g")(
               // size-ratio prune (j ≥ t ⇒ min|set| ≥ t·max|set|): cheap int
               // compare eliminates pairs before the signature probe
-              least(col("sz_a"), col("sz_b")).cast("double") >=
-                lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double") &&
-              arrays_overlap(col("sig_a"), col("sig_b")))
-            .select("id_a", "id_b")
+              least(col("a.sz"), col("b.sz")).cast("double") >=
+                lit(threshold) * greatest(col("a.sz"), col("b.sz")).cast("double") &&
+              arrays_overlap(col("a.sig"), col("b.sig")))
+            .select(col("a.g").as("id_a"), col("b.g").as("id_b"))
         } else {
           val reps = groups.select(col("g").as("id"), array_join(col("words"), " ").as("text"))
           minhashCandidates(reps, "id", "text", bands, r)
@@ -385,6 +398,7 @@ object Dedup {
     // (a corpus whose set×source grain is genuinely huge) the exchange
     // plan stands.
     val gsrcSmall = gsrc.count() <= 1000000L
+    Route.record(docs.sparkSession, "source_overlap", if (gsrcSmall) "broadcast" else "shuffle")
     def gsrcSide(d: DataFrame): DataFrame = if (gsrcSmall) broadcast(d) else d
     def cell(s1: Column, s2: Column) =
       Seq(least(s1, s2).as("source_a"), greatest(s1, s2).as("source_b"))
@@ -661,17 +675,23 @@ object Dedup {
     * never carry arrays through the shuffle.
     */
   def buildNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
-                        bands: Int = 20, r: Int = 2, shingleN: Int = 1): DataFrame = {
-    val units = setUnits(shingleN)
-    val keyed = corpus.select(col(idCol).as("__gmin"), setKey(col(textCol), shingleN).as("set_key"))
-    val skeleton = keyed.groupBy("set_key").agg(min(col("__gmin")).as("__gmin"))
-    skeleton
-      .join(corpus.select(col(idCol).as("__gmin"), col(textCol).as("__text")), "__gmin")
-      .select(col("set_key"), sort_array(units(col("__text"))).as("words"))
+                        bands: Int = 20, r: Int = 2, shingleN: Int = 1): DataFrame =
+    indexRows(corpus.select(col(idCol).as("id"), setKey(col(textCol), shingleN).as("set_key")),
+      corpus, idCol, textCol, bands, r, shingleN)
+
+  /** Index rows (set_key, words, sz, bks) of the slim (id, set_key) frame
+    * `keyed` over `docs`: one row per distinct set, its words re-derived
+    * from the set's min-id document. Builds both the corpus index and a
+    * probe batch's reps.
+    */
+  private def indexRows(keyed: DataFrame, docs: DataFrame, idCol: String, textCol: String,
+                        bands: Int, r: Int, shingleN: Int): DataFrame =
+    keyed.groupBy("set_key").agg(min(col("id")).as("id"))
+      .join(docs.select(col(idCol).as("id"), col(textCol).as("__text")), "id")
+      .select(col("set_key"), sort_array(setUnits(shingleN)(col("__text"))).as("words"))
       .withColumn("sz", size(col("words")))
       .withColumn("bks",
         bandKeys(NativeHash.minhashSignature(array_join(col("words"), " "), bands * r), bands, r))
-  }
 
   /** INCREMENTAL dedup — the shape a production 100 TB corpus actually runs:
     * new batch rows survive iff no document already in the corpus is a
@@ -714,12 +734,6 @@ object Dedup {
       batchBroadcastThreshold, nestedLoopWorkBudget)
   }
 
-  /** Which probe route the last [[probeSurvivors]] call took ("nested" |
-    * "banded") — test/probe observability for the planner; never read it
-    * concurrently with running jobs.
-    */
-  @volatile private[graft] var lastProbeRoute: String = ""
-
   /** Probe a prebuilt [[buildNearDupIndex]] frame with a new batch; returns
     * the surviving batch rows. See [[incrementalSurvivors]].
     *
@@ -761,16 +775,12 @@ object Dedup {
                      threshold: Double, bands: Int = 20, r: Int = 2,
                      shingleN: Int = 1, batchBroadcastThreshold: Long = 65536L,
                      nestedLoopWorkBudget: Long = 1L << 30): DataFrame = {
-    val units = setUnits(shingleN)
     // one batch pass → slim (id, set_key); canonical batch duplicates probe once
     val keyed = Caches.persist(
-      batch.select(col(idCol).as("__bid"), setKey(col(textCol), shingleN).as("__bkey")))
-    val bReps = Caches.persist(keyed.groupBy("__bkey").agg(min(col("__bid")).as("__bid"))
-      .join(batch.select(col(idCol).as("__bid"), col(textCol).as("__btext")), "__bid")
-      .select(col("__bkey"), sort_array(units(col("__btext"))).as("__bwords"))
-      .withColumn("__bsz", size(col("__bwords")))
-      .withColumn("__bbks",
-        bandKeys(NativeHash.minhashSignature(array_join(col("__bwords"), " "), bands * r), bands, r)))
+      batch.select(col(idCol).as("id"), setKey(col(textCol), shingleN).as("set_key")))
+    val bReps = Caches.persist(indexRows(keyed, batch, idCol, textCol, bands, r, shingleN)
+      .select(col("set_key").as("__bkey"), col("words").as("__bwords"),
+        col("sz").as("__bsz"), col("bks").as("__bbks")))
 
     // j ≥ t ⇒ min|set| ≥ t·max|set| — cheap int compare before anything else
     def sizePrune(sz: Column, bsz: Column): Column =
@@ -785,7 +795,7 @@ object Dedup {
     val nB = bReps.count()
     val useNested = nB <= batchBroadcastThreshold &&
       index.count() <= nestedLoopWorkBudget / math.max(nB, 1L)
-    lastProbeRoute = if (useNested) "nested" else "banded"
+    Route.record(batch.sparkSession, "probe", if (useNested) "nested" else "banded")
     val contaminated =
       if (useNested) {
         // The streamed index MUST be persisted (deserialized) for this
@@ -808,12 +818,14 @@ object Dedup {
         // slim repartitioned copy below. The incrementalSurvivors pin only
         // pays off on the banded route, which reads the index twice; release
         // it here so the common incremental path holds ONE corpus-sized
-        // cache, not two. An index the caller pinned stays pinned: a caller
+        // cache, not two. The copy is materialized off the pinned index
+        // first: released before, the copy would rebuild the whole index
+        // from the corpus. An index the caller pinned stays pinned: a caller
         // probing one index batch after batch keeps its cache.
-        Caches.unpersist(index)
         val width = index.sparkSession.sparkContext.defaultParallelism
         val slim = Caches.persist(index.select(col("words"), col("sz"), col("bks"))
           .repartition(width))
+        if (Caches.pinned(index)) { slim.count(); Caches.unpersist(index) }
         // condition order (And short-circuits left-to-right): scalar size
         // prune first, then band overlap (20-long arrays), then the full
         // jaccard merge-scan on the survivors — overlap only downgrades
@@ -836,8 +848,9 @@ object Dedup {
           .filter(sizePrune(col("sz"), col("__bsz"))))
       }
 
-    val survivorIds = keyed.join(broadcast(contaminated), Seq("__bkey"), "left_anti")
-      .select(col("__bid").as(idCol))
+    val survivorIds = keyed
+      .join(broadcast(contaminated.select(col("__bkey").as("set_key"))), Seq("set_key"), "left_anti")
+      .select(col("id").as(idCol))
     batch.join(survivorIds, idCol)
   }
 
@@ -874,6 +887,7 @@ object Dedup {
     val fp = Caches.persist(graft.GraftSession.rebalanceScan(docs)
       .select(col(idCol).as("id"), NativeHash.simhash64(col(textCol)).as("sim")))
     val useBlocks = blockKeys.getOrElse(fp.count() > blockThreshold)
+    Route.record(docs.sparkSession, "simhash", if (useBlocks) "blocks" else "quarters")
     val keyed =
       if (useBlocks) {
         val blocks = Seq((0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10))
@@ -899,9 +913,7 @@ object Dedup {
             q.cast("long") * lit(1000003L) +
               call_function("shiftright", col("sim"), q * 16).bitwiseAND(lit(0xFFFFL)))).as("bk"))
       }
-    keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
+    keyPairs(keyed, "id", "bk")(lit(true))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).as("hamming"))
       // filter BEFORE distinct: the hamming cut runs map-side on the raw
@@ -919,13 +931,10 @@ object Dedup {
     */
   def embedNearDupPairs(vecs: DataFrame, idCol: String, vecCol: String,
                         threshold: Double): DataFrame = {
-    val a = vecs.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-      .repartition(vecs.sparkSession.sparkContext.defaultParallelism)
-    val b = vecs.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
-    a.join(broadcast(b), col("id_a") < col("id_b"))
-      .withColumn("cosine", NativeHash.cosine(col("va"), col("vb")))
+    allPairs(vecs.select(col(idCol).as("id"), col(vecCol).as("v")), "id")(lit(true))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        NativeHash.cosine(col("a.v"), col("b.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
   }
 
   /** Scale path for embedding near-dup: MULTI-TABLE hyperplane LSH —
@@ -944,14 +953,8 @@ object Dedup {
     * candidate pairs → vectors join back only for the verify. Per-task
     * pair counts are bucket-bounded instead of corpus²; the verify join
     * only ever sees candidates.
-    */
-  /** Which route the last [[embedNearDupPairsLsh]] call took ("brute" |
-    * "exploded") — test observability for the planner split; never read it
-    * concurrently with running jobs.
-    */
-  @volatile private[graft] var lastEmbedLshRoute: String = ""
-
-  /** @param bruteThreshold max VECTORS for the broadcast aligned-key scan;
+    *
+    * @param bruteThreshold max VECTORS for the broadcast aligned-key scan;
     *                        above it the exploded bucket equi-join runs.
     *                        Both routes produce the identical pair set
     *                        (spec-asserted): key t packs its table index in
@@ -989,21 +992,15 @@ object Dedup {
     // 2^k ≫ L — measured: 32×2 (4 buckets/table) 4.4 s exploded vs 0.6 s
     // brute, while 8×16 (2¹⁶ buckets/table) is 0.37 s exploded vs 0.56 s
     // brute at the same n.
-    val n = keyed.count()
-    if (n <= bruteThreshold && nTables.toLong >= (1L << planesPerTable)) {
-      lastEmbedLshRoute = "brute"
-      val a = keyed.select(col("id").as("id_a"), col("v").as("va"), col("ks").as("ka"))
-        .repartition(vecs.sparkSession.sparkContext.defaultParallelism)
-      val b = keyed.select(col("id").as("id_b"), col("v").as("vb"), col("ks").as("kb"))
-      a.join(broadcast(b), col("id_a") < col("id_b") && arrays_overlap(col("ka"), col("kb")))
-        .withColumn("cosine", NativeHash.cosine(col("va"), col("vb")))
+    val brute = keyed.count() <= bruteThreshold && nTables.toLong >= (1L << planesPerTable)
+    Route.record(vecs.sparkSession, "embed_lsh", if (brute) "brute" else "exploded")
+    if (brute) {
+      allPairs(keyed, "id")(arrays_overlap(col("a.ks"), col("b.ks")))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          NativeHash.cosine(col("a.v"), col("b.v")).as("cosine"))
         .filter(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     } else {
-      lastEmbedLshRoute = "exploded"
-      val ek = keyed.select(col("id"), explode(col("ks")).as("bk"))
-      val cand = ek.as("a")
-        .join(ek.as("b"), col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
+      val cand = keyPairs(keyed.select(col("id"), explode(col("ks")).as("bk")), "id", "bk")(lit(true))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .distinct()
       cand
@@ -1291,22 +1288,19 @@ object Dedup {
     canonicalSets(docs, idCol, textCol, shingleN) { (skel, groups) =>
       // route choice on the distinct-set count (one control-plane scalar;
       // also materializes the persisted skeleton) — see bruteThreshold above
-      val nSets = skel.count()
-      if (nSets <= bruteThreshold) {
+      val brute = skel.count() <= bruteThreshold
+      Route.record(docs.sparkSession, "prefix", if (brute) "brute" else "prefix")
+      // the exact-integer size-ratio prune (min ≥ t·max ⇔ d·min ≥ n·max)
+      def sizeOk(sa: Column, sb: Column): Column =
+        lit(tDen.toLong) * least(sa, sb) >= lit(tNum.toLong) * greatest(sa, sb)
+      if (brute) {
         // broadcast all-pairs verify: trivially complete, n²/2 size-pruned
-        // condition evaluations; the probe side repartitions so the scan
-        // parallelizes off the few-partition cached frame
-        val a = groups.select(col("g").as("ga"), col("words").as("wa"),
-            size(col("words")).as("sa"))
-          .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        val b = groups.select(col("g").as("gb"), col("words").as("wb"),
-          size(col("words")).as("sb"))
-        val pairs = a.join(broadcast(b),
-          col("ga") < col("gb") &&
-            lit(tDen.toLong) * least(col("sa"), col("sb")) >=
-              lit(tNum.toLong) * greatest(col("sa"), col("sb")))
-        withJaccard(pairs, "wa", "wb", threshold)
-          .select(col("ga").as("id_a"), col("gb").as("id_b"), col("jaccard"))
+        // condition evaluations
+        val pairs = allPairs(groups.select(col("g"), col("words"), size(col("words")).as("sz")), "g")(
+            sizeOk(col("a.sz"), col("b.sz")))
+          .select(col("a.g").as("id_a"), col("a.words").as("wa"),
+            col("b.g").as("id_b"), col("b.words").as("wb"))
+        withJaccard(pairs, "wa", "wb", threshold).select("id_a", "id_b", "jaccard")
       } else {
         // global rarest-first order: df over DISTINCT sets (any global total
         // order is correct; df-ascending keeps the indexed prefixes cold)
@@ -1327,9 +1321,9 @@ object Dedup {
             posexplode(slice(col("ow"), lit(1), col("p")))
               .as(Seq("pos", "w")))
         // inverted-index equi-join on the prefix token; two exact-integer
-        // prunes ride the join condition: the size-ratio (min ≥ t·max ⇔
-        // d·min ≥ n·max) and PPJoin's POSITIONAL filter — a jaccard-≥t pair
-        // needs overlap α = ⌈n(sa+sb)/(n+d)⌉, and for the FIRST common token
+        // prunes ride the join condition: the size-ratio and PPJoin's
+        // POSITIONAL filter — a jaccard-≥t pair needs overlap
+        // α = ⌈n(sa+sb)/(n+d)⌉, and for the FIRST common token
         // (0-based positions pa, pb) the overlap is ≤ 1 + min(sa−1−pa,
         // sb−1−pb); every true pair's first-common-token row passes (earlier
         // common tokens would contradict "first"), so completeness holds
@@ -1337,11 +1331,8 @@ object Dedup {
         // the distinct (measured 14.8M → much smaller raw stream on the
         // 31-word dense corpus)
         val alphaDen = (tNum + tDen).toLong
-        val cand = pref.as("a").join(pref.as("b"),
-            col("a.w") === col("b.w") &&
-            col("a.g") < col("b.g") &&
-            lit(tDen.toLong) * least(col("a.sz"), col("b.sz")) >=
-              lit(tNum.toLong) * greatest(col("a.sz"), col("b.sz")) &&
+        val cand = keyPairs(pref, "g", "w")(
+            sizeOk(col("a.sz"), col("b.sz")) &&
             (lit(1L) + least(col("a.sz") - 1 - col("a.pos"), col("b.sz") - 1 - col("b.pos"))) *
               lit(alphaDen) >= lit(tNum.toLong) * (col("a.sz") + col("b.sz")))
           .select(col("a.g").as("id_a"), col("b.g").as("id_b"))

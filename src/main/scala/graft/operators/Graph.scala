@@ -76,7 +76,8 @@ object Graph {
     * width of both endpoints for string ids (the width must be known
     * before anything is collected). Duplicate edges are not removed
     * first — both routes accept them, and a raw count can only push the
-    * choice toward the distributed route.
+    * choice toward the distributed route. The choice is recorded as
+    * [[Route]] site `cc`.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxRounds: Int = 50,
@@ -89,20 +90,10 @@ object Graph {
           avg(octet_length(col("src")) + octet_length(col("dst")))).head
         (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1) + 2 * StringIdOverheadBytes)
       } else (dir0.count(), LongEdgeBytes)
-    if (nEdges <= driverEdgeBudget(collectEdgeThreshold, bytesPerEdge)) {
-      lastCcRoute = "driver"
-      ccDriverLabels(dir0)
-    } else {
-      lastCcRoute = "distributed"
-      ccDistributedLabels(dir0, maxRounds)
-    }
+    val onDriver = nEdges <= driverEdgeBudget(collectEdgeThreshold, bytesPerEdge)
+    Route.record(edges.sparkSession, "cc", if (onDriver) "driver" else "distributed")
+    if (onDriver) ccDriverLabels(dir0) else ccDistributedLabels(dir0, maxRounds)
   }
-
-  /** Which route the last [[connectedComponents]] call took ("driver" |
-    * "distributed") — test observability for the planner split; never read
-    * it concurrently with running jobs.
-    */
-  @volatile private[graft] var lastCcRoute: String = ""
 
   /** Bytes per edge `collectEdgeThreshold` is calibrated for: two 8-byte
     * ids, ≈ 64 MB of driver control plane at the 4M default.

@@ -78,9 +78,7 @@ object Winnow {
     val kept = fp.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
       .select("h")
-    val posting = fp.join(kept, "h")
-    posting.as("a").join(posting.as("b"),
-        col("a.h") === col("b.h") && col("a.id") < col("b.id"))
+    Dedup.keyPairs(fp.join(kept, "h"), "id", "h")(lit(true))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

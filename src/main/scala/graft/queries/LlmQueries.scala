@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.GraftSession.table
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Ann, Caches, Curation, Dedup, Graph, Winnow}
+import graft.operators.{Ann, Caches, Curation, Dedup, Graph, Route, Winnow}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -322,7 +322,9 @@ object LlmQueries {
     val nSetsScalar = sub.skel.count()
     val thresholds = Seq(0.7, 0.8, 0.9)
     // a collected pair is two long ids plus its jaccard double: 24 bytes
-    if (nPairs <= Graph.driverEdgeBudget(collectEdgeThreshold, bytesPerEdge = 24.0)) {
+    val onDriver = nPairs <= Graph.driverEdgeBudget(collectEdgeThreshold, bytesPerEdge = 24.0)
+    Route.record(s, "keep_sweep", if (onDriver) "driver" else "distributed")
+    if (onDriver) {
       val pairs = rp.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       val rows = thresholds.map { t =>
         val labels = Graph.unionFind(pairs.iterator.collect { case (a, b, j) if j >= t => (a, b) })

@@ -3,7 +3,7 @@ package graft
 import graft.config.InputConfig
 import graft.operators.Aggregator
 import graft.sinks.ProduceSink
-import graft.sources.{CsvSource, ExcelSource, SheetsSource}
+import graft.sources.{CsvSource, ExcelSource, SheetsSource, XlsxWriter}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.nio.file.{Files, Paths}
 
@@ -87,7 +87,7 @@ class AggregatorSpec extends SparkSpec {
   test("multi-source config: xlsx base keyed + sheets dump grafting fields") {
     val dir = Files.createTempDirectory("agg2").toString
     // base: xlsx with upc+price
-    Files.write(Paths.get(dir, "base.xlsx"), XlsxTestWriter.build(Seq(
+    Files.write(Paths.get(dir, "base.xlsx"), XlsxWriter.build(Seq(
       "Feed" -> Seq(Seq("upc", "price"), Seq("111", 5.0), Seq("222", 8.0)))))
     // enrich: sheets values dump with upc+stock
     Files.writeString(Paths.get(dir, "sheet1"),

@@ -56,7 +56,7 @@ class CodegenReuseSpec extends SparkSpec {
   private def writeXlsx(dir: Path, rel: String, header: Seq[String], rs: Seq[Seq[String]]): Unit = {
     val p = dir.resolve(rel)
     Files.createDirectories(p.getParent)
-    Files.write(p, XlsxTestWriter.build(Seq("Sheet1" -> (header +: rs))))
+    Files.write(p, XlsxWriter.build(Seq("Sheet1" -> (header +: rs))))
   }
 
   private def json(s: String) = "\"" + s.replace("\"", "\\\"") + "\""

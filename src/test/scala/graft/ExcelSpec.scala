@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{A1Range, ExcelSource}
+import graft.sources.{A1Range, ExcelSource, XlsxWriter}
 import org.apache.spark.sql.Row
 import java.nio.file.{Files, Paths}
 
@@ -18,7 +18,7 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("parseXlsx reads shared strings, numbers, gaps, multiple sheets") {
-    val bytes = XlsxTestWriter.build(Seq(
+    val bytes = XlsxWriter.build(Seq(
       "Prices" -> Seq(
         Seq("upc", "price", "qty"),
         Seq("000111222333", 12.5, 3),
@@ -36,7 +36,7 @@ class ExcelSpec extends SparkSpec {
 
   test("readXlsxGrid + toTable: header row becomes columns, range applies") {
     val dir = Files.createTempDirectory("xlsx").toString
-    val bytes = XlsxTestWriter.build(Seq(
+    val bytes = XlsxWriter.build(Seq(
       "Feed" -> Seq(
         Seq("junk", "junk2"),
         Seq("upc", "price"),
@@ -55,7 +55,7 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("toTable: duplicate header names collapse last-occurrence-wins (array_combine parity)") {
-    val bytes = XlsxTestWriter.build(Seq(
+    val bytes = XlsxWriter.build(Seq(
       "S" -> Seq(
         Seq("id", "qty", "qty", "price"),
         Seq("a", 1, 2, 9.5),
@@ -71,7 +71,7 @@ class ExcelSpec extends SparkSpec {
   test("toTable: data wider than the header reads through padded null-name columns") {
     // PhpSpreadsheet rectangularizes, so header gains null cells → all
     // collapse into ONE trailing column (PHP "" key, last occurrence wins)
-    val bytes = XlsxTestWriter.build(Seq(
+    val bytes = XlsxWriter.build(Seq(
       "S" -> Seq(
         Seq("id"),
         Seq("a", "x1", "x2"),
@@ -103,7 +103,7 @@ class ExcelSpec extends SparkSpec {
   test("sheet names follow workbook.xml.rels r:id mapping, not part numbering") {
     // workbook order: First (stored as sheet9.xml), Second (stored as
     // sheet2.xml) — numeric part order would pair the names backwards
-    val bytes = XlsxTestWriter.build(
+    val bytes = XlsxWriter.build(
       Seq(
         "First"  -> Seq(Seq("a"), Seq("from-first")),
         "Second" -> Seq(Seq("b"), Seq("from-second"))),
@@ -135,7 +135,7 @@ class ExcelSpec extends SparkSpec {
       }
       val useRels = rnd.nextBoolean()
       val parts = if (useRels) Some(rnd.shuffle((10 until 10 + nSheets).toList).toSeq) else None
-      val bytes = XlsxTestWriter.build(sheets, partNumbering = parts)
+      val bytes = XlsxWriter.build(sheets, partNumbering = parts)
       val parsed = ExcelSource.parseXlsx(bytes).toVector
       sheets.zipWithIndex.foreach { case ((name, rows), si) =>
         val got = parsed.filter(_.sheet == name).sortBy(_.rowIdx)
@@ -159,7 +159,7 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("missing sheet falls back to first sheet; single-column range") {
-    val bytes = XlsxTestWriter.build(Seq("S1" -> Seq(Seq("a", "b"), Seq("1", "2"))))
+    val bytes = XlsxWriter.build(Seq("S1" -> Seq(Seq("a", "b"), Seq("1", "2"))))
     val grid = spark.createDataset(ExcelSource.parseXlsx(bytes).toSeq)
     val out = ExcelSource.selectRange(ExcelSource.gridDF(grid), Some("Nope!B")).orderBy("row_idx").collect()
     assert(out.map(_.getSeq[String](1)).toSeq == Seq(Seq("b"), Seq("2")))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Graph, Route}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point PageRank (`Graph.pageRank`): a driver-side reference model
@@ -225,11 +225,11 @@ class GraphSpec extends SparkSpec {
     for (g <- Seq(chain, twoComps, dups, directedOnly, selfLoop)) {
       // driver union-find route (fixtures sit under the byte-aware budget)
       assert(runCc(g) === ccTrue(g), s"graph=$g")
-      assert(Graph.lastCcRoute === "driver")
+      assert(Route.last(spark, "cc") === "driver")
       // distributed propagation route, forced — the r13 planner split must
       // keep both routes label-identical
       assert(runCc(g, collectEdgeThreshold = 0L) === ccTrue(g), s"graph=$g (distributed)")
-      assert(Graph.lastCcRoute === "distributed")
+      assert(Route.last(spark, "cc") === "distributed")
     }
   }
 
@@ -252,7 +252,7 @@ class GraphSpec extends SparkSpec {
     // is the fourth. A separate distinct, count or width job would add more
     val g = Seq("a" -> "b", "b" -> "c", "x" -> "y", "a" -> "b")
     val (labels, jobs) = jobsStartedBy(Graph.connectedComponents(g.toDF("src", "dst"), "src", "dst"))
-    assert(Graph.lastCcRoute === "driver")
+    assert(Route.last(spark, "cc") === "driver")
     assert(labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap === ccTrue(g))
     graft.operators.Caches.release()
     assert(jobs === 4, s"connectedComponents started $jobs jobs")
@@ -265,7 +265,7 @@ class GraphSpec extends SparkSpec {
     val g = Seq("a0" -> s"${wide}0", "a1" -> s"${wide}0", "a1" -> s"${wide}1", "a2" -> s"${wide}1")
     for (edges <- Seq(g, g.map(_.swap))) {
       assert(runCc(edges, collectEdgeThreshold = 32L) === ccTrue(edges))
-      assert(Graph.lastCcRoute === "distributed", s"wide endpoint ignored for $edges")
+      assert(Route.last(spark, "cc") === "distributed", s"wide endpoint ignored for $edges")
     }
   }
 
@@ -283,7 +283,7 @@ class GraphSpec extends SparkSpec {
     val got = Graph.connectedComponents(e, "src", "dst")
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     graft.operators.Caches.release()
-    assert(Graph.lastCcRoute === "driver")
+    assert(Route.last(spark, "cc") === "driver")
     assert(got === ccTrue(pairs))
     assert(got.nonEmpty)
     // the at-scale propagation route must produce the identical labeling
@@ -292,7 +292,7 @@ class GraphSpec extends SparkSpec {
         collectEdgeThreshold = 0L)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     graft.operators.Caches.release()
-    assert(Graph.lastCcRoute === "distributed")
+    assert(Route.last(spark, "cc") === "distributed")
     assert(gotDist === got)
   }
 }

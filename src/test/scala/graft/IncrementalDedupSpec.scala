@@ -1,8 +1,10 @@
 package graft
 
-import graft.operators.{Caches, Dedup}
+import graft.operators.{Caches, Dedup, Route}
 import org.apache.spark.sql.{CachedRelations, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.storage.StorageLevel
 
 /** Incremental (batch-vs-corpus) dedup: constructive ground truth — the
@@ -12,6 +14,8 @@ import org.apache.spark.storage.StorageLevel
   * all-pairs scan.
   */
 class IncrementalDedupSpec extends SparkSpec {
+
+  private object CachePlans extends AdaptiveSparkPlanHelper
 
   private val n = 200
 
@@ -106,14 +110,14 @@ class IncrementalDedupSpec extends SparkSpec {
     // small batch + generous budget → nested loop
     val a = Dedup.probeSurvivors(idx, batch(), "id", "text", threshold = 0.8)
       .select("id").collect().map(_.getLong(0)).toSet
-    assert(Dedup.lastProbeRoute == "nested")
+    assert(Route.last(spark, "probe") == "nested")
     Caches.release()
     // same small batch, but a work budget the index exceeds → the planner
     // must refuse the |index|·|batch| scan and take the banded route
     val b = Dedup.probeSurvivors(idx, batch(), "id", "text", threshold = 0.8,
         nestedLoopWorkBudget = 1L)
       .select("id").collect().map(_.getLong(0)).toSet
-    assert(Dedup.lastProbeRoute == "banded")
+    assert(Route.last(spark, "probe") == "banded")
     Caches.release()
     assert(a == b && a.size == 2 * n)
   }
@@ -125,7 +129,7 @@ class IncrementalDedupSpec extends SparkSpec {
     try {
       Dedup.probeSurvivors(idx, batch().filter(col("id") < 10 * n + 10), "id", "text",
           threshold = 0.8).collect()
-      assert(Dedup.lastProbeRoute == "nested")
+      assert(Route.last(spark, "probe") == "nested")
       assert(idx.storageLevel != StorageLevel.NONE, "probe unpinned the caller's index")
     } finally { idx.unpersist(); Caches.release() }
   }
@@ -134,12 +138,29 @@ class IncrementalDedupSpec extends SparkSpec {
     Caches.release()
     val before = CachedRelations.count(spark)
     Dedup.incrementalSurvivors(corpus(), batch(), "id", "text", threshold = 0.8).collect()
-    assert(Dedup.lastProbeRoute == "nested")
+    assert(Route.last(spark, "probe") == "nested")
     // keyed batch, batch reps and the slim repartitioned index copy; the
     // full index pin is gone
     assert(CachedRelations.count(spark) - before == 3)
     Caches.release()
     assert(CachedRelations.count(spark) == before)
+  }
+
+  test("nested incremental route builds its slim index copy from the pinned index") {
+    Caches.release()
+    Dedup.incrementalSurvivors(corpus(), batch(), "id", "text", threshold = 0.8).collect()
+    assert(Route.last(spark, "probe") == "nested")
+    val slim = CachedRelations.plans(spark).collect {
+      case (logical, physical) if logical.output.map(_.name) == Seq("words", "sz", "bks") => physical
+    }
+    Caches.release()
+    assert(slim.size == 1, s"expected one cached slim index copy, got ${slim.size}")
+    // released before the copy was materialized, the index pin is gone from
+    // the copy's cached plan, which then re-runs the whole corpus build
+    val indexScans = CachePlans.collect(slim.head) {
+      case s: InMemoryTableScanExec if s.relation.output.map(_.name).contains("bks") => s
+    }
+    assert(indexScans.nonEmpty, s"slim copy does not read the index cache:\n${slim.head}")
   }
 
   test("result is stable under repartitioning both sides") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Caches, Dedup, Graph}
+import graft.operators.{Caches, Dedup, Graph, Route}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -136,11 +136,11 @@ class NearDupKeepSpec extends SparkSpec {
 
     val keptLong = Dedup.dropDuplicatesNear(longIds, "id", "text", 0.8, collectEdgeThreshold = 8L)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val longRoute = Graph.lastCcRoute
+    val longRoute = Route.last(spark, "cc")
     Caches.release()
     val keptWide = Dedup.dropDuplicatesNear(wideIds, "id", "text", 0.8, collectEdgeThreshold = 8L)
       .select("id").collect().map(_.getString(0)).toSeq
-    val wideRoute = Graph.lastCcRoute
+    val wideRoute = Route.last(spark, "cc")
     Caches.release()
     assert(longRoute == "driver", s"8-byte ids within the edge budget should collect, took $longRoute")
     assert(wideRoute == "distributed", s"wide ids must engage the distributed route, took $wideRoute")

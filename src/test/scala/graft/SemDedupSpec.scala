@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Dedup, Graph}
+import graft.operators.{Ann, Dedup, Route}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,11 +41,11 @@ class SemDedupSpec extends SparkSpec {
     val one = Seq((0, Array.fill(8)(0.1f))).toDF("cid", "centroid")
     val viaDriver = Dedup.dropDuplicatesSemantic(emb, "vec_id", "embedding", one, 0.3)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(Graph.lastCcRoute == "driver")
+    assert(Route.last(spark, "cc") == "driver")
     val viaDistributed = Dedup.dropDuplicatesSemantic(emb, "vec_id", "embedding", one, 0.3,
         collectEdgeThreshold = 0L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(Graph.lastCcRoute == "distributed")
+    assert(Route.last(spark, "cc") == "distributed")
     assert(viaDriver == viaDistributed)
   }
 

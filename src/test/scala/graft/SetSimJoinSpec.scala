@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Caches, Dedup}
+import graft.operators.{Caches, Dedup, Route}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,9 +67,11 @@ class SetSimJoinSpec extends SparkSpec {
       val brute = Dedup.prefixSub(docs, "id", "text", 4, 5)
         .repPairs.orderBy("id_a", "id_b").collect().toSeq
       Caches.release()
+      assert(Route.last(spark, "prefix") == "brute", tag)
       val prefix = Dedup.prefixSub(docs, "id", "text", 4, 5, bruteThreshold = 0L)
         .repPairs.orderBy("id_a", "id_b").collect().toSeq
       Caches.release()
+      assert(Route.last(spark, "prefix") == "prefix", tag)
       assert(brute.nonEmpty, tag)
       assert(brute == prefix, tag)
     }
@@ -77,6 +79,7 @@ class SetSimJoinSpec extends SparkSpec {
 
   test("prefix route (forced) still finds exactly the constructed pairs") {
     val sub = Dedup.prefixSub(corpus(700), "id", "text", 4, 5, bruteThreshold = 0L)
+    assert(Route.last(spark, "prefix") == "prefix")
     val cross = sub.repPairs
       .join(sub.keyed.select(col("g").as("id_a"), col("id").as("ia")), "id_a")
       .join(sub.keyed.select(col("g").as("id_b"), col("id").as("ib")), "id_b")
@@ -132,7 +135,9 @@ class SetSimJoinSpec extends SparkSpec {
     assert(ref.size == 90 && ref.count(_._3 == 1.0) == 30)
     val viaBrute = rows(Dedup.prefixFilterPairs(docs, "id", "text", 4, 5, shingleN = 3))
     Caches.release()
+    assert(Route.last(spark, "prefix") == "brute")
     val forced = Dedup.prefixSub(docs, "id", "text", 4, 5, shingleN = 3, bruteThreshold = 0L)
+    assert(Route.last(spark, "prefix") == "prefix")
     val viaPrefix = rows(Dedup.docPairs(forced))
     Caches.release()
     val viaMinhash = rows(Dedup.nearDupPairs(docs, "id", "text", 0.8, shingleN = 3))
@@ -148,19 +153,22 @@ class SetSimJoinSpec extends SparkSpec {
     // building block cannot add a job to either family.
     val docs = corpus(60).unionByName(
       corpus(60).filter(col("id") < 10).withColumn("id", col("id") + 1000))
-    def jobs(build: => DataFrame): (Int, Int, Long) = {
+    // the route each build took, read right after it: (site, choice)
+    val routes = Seq.newBuilder[(String, String)]
+    def jobs(site: String)(build: => DataFrame): (Int, Int, Long) = {
       Caches.release()
       val (df, built) = jobsStartedBy(build)
+      routes += site -> Route.last(spark, site)
       val (n, collected) = jobsStartedBy(df.collect().length.toLong)
       Caches.release()
       (built, collected, n)
     }
     val got = Seq(
-      "nearDupPairs" -> jobs(Dedup.nearDupPairs(docs, "id", "text", 0.8)),
+      "nearDupPairs" -> jobs("minhash")(Dedup.nearDupPairs(docs, "id", "text", 0.8)),
       "nearDupPairs banded" ->
-        jobs(Dedup.nearDupPairs(docs, "id", "text", 0.8, broadcastThreshold = 0L)),
-      "prefixFilterPairs" -> jobs(Dedup.prefixFilterPairs(docs, "id", "text", 4, 5)),
-      "prefixFilterPairs prefix join" -> jobs {
+        jobs("minhash")(Dedup.nearDupPairs(docs, "id", "text", 0.8, broadcastThreshold = 0L)),
+      "prefixFilterPairs" -> jobs("prefix")(Dedup.prefixFilterPairs(docs, "id", "text", 4, 5)),
+      "prefixFilterPairs prefix join" -> jobs("prefix") {
         Dedup.docPairs(Dedup.prefixSub(docs, "id", "text", 4, 5, bruteThreshold = 0L))
       })
     info(got.mkString(", "))
@@ -171,5 +179,7 @@ class SetSimJoinSpec extends SparkSpec {
       "nearDupPairs banded" -> (8, 14, 80L),
       "prefixFilterPairs" -> (5, 15, 80L),
       "prefixFilterPairs prefix join" -> (5, 26, 80L)), got)
+    assert(routes.result() == Seq("minhash" -> "broadcast", "minhash" -> "banded",
+      "prefix" -> "brute", "prefix" -> "prefix"))
   }
 }

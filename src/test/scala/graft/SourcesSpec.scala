@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{InputConfig, SourceRouter}
 import graft.operators.{MapRule, MultiSourceMerge, SubSourceFeed}
-import graft.sources.{CsvSource, MorrisXmlSource, RestJsonSource}
+import graft.sources.{CsvSource, MorrisXmlSource, RestJsonSource, XlsxWriter}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -81,7 +81,7 @@ class SourcesSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     val dir = Files.createTempDirectory("drv").toString
     Files.writeString(Paths.get(dir, "b_feed.csv"), "sku,qty\nB-1,9\n")
-    Files.write(Paths.get(dir, "a_feed.xlsx"), XlsxTestWriter.build(Seq(
+    Files.write(Paths.get(dir, "a_feed.xlsx"), XlsxWriter.build(Seq(
       "S" -> Seq(Seq("sku", "qty"), Seq("A-1", 4)))))
     // a_feed.xlsx sorts first -> excel path
     val out = graft.sources.DriveFolderSource.read(spark, dir, None).collect()

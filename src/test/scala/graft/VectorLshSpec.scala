@@ -112,10 +112,10 @@ class VectorLshSpec extends SparkSpec {
     val emb = GraftSession.table(spark, sfDir, "embeddings")
     val brute = Dedup.embedNearDupPairsLsh(emb, "vec_id", "embedding", 0.3,
       nTables = 32, planesPerTable = 2)
-    assert(graft.operators.Dedup.lastEmbedLshRoute == "brute")
+    assert(graft.operators.Route.last(spark, "embed_lsh") == "brute")
     val exploded = Dedup.embedNearDupPairsLsh(emb, "vec_id", "embedding", 0.3,
       nTables = 32, planesPerTable = 2, bruteThreshold = 0L)
-    assert(graft.operators.Dedup.lastEmbedLshRoute == "exploded")
+    assert(graft.operators.Route.last(spark, "embed_lsh") == "exploded")
     assert(brute.exceptAll(exploded).isEmpty && exploded.exceptAll(brute).isEmpty,
       "route outputs diverge at L=32 k=2")
     // bucket-bounded config: the L >= 2^k gate keeps 8x16 on the exploded
@@ -123,7 +123,7 @@ class VectorLshSpec extends SparkSpec {
     // slower there)
     Dedup.embedNearDupPairsLsh(emb, "vec_id", "embedding", 0.3,
       nTables = 8, planesPerTable = 16).count()
-    assert(graft.operators.Dedup.lastEmbedLshRoute == "exploded")
+    assert(graft.operators.Route.last(spark, "embed_lsh") == "exploded")
     graft.operators.Caches.release()
   }
 

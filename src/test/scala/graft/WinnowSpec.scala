@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Graph, Winnow}
+import graft.operators.{Route, Winnow}
 import org.apache.spark.sql.functions._
 
 /** Winnowing fingerprints (`Winnow.fingerprints`, Schleimer et al. 2003):
@@ -185,9 +185,9 @@ class WinnowSpec extends SparkSpec {
     }
     // both connected-components routes keep the same documents
     val viaLoop = kept(0L)
-    assert(Graph.lastCcRoute === "distributed")
+    assert(Route.last(spark, "cc") === "distributed")
     val got = kept(1L << 22)
-    assert(Graph.lastCcRoute === "driver")
+    assert(Route.last(spark, "cc") === "driver")
     assert(got === want)
     assert(viaLoop === got)
   }
